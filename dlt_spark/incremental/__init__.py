@@ -203,7 +203,8 @@ class Incremental:
                 # at a later cursor value is an update and must load).  AQE
                 # broadcasts the hash side when it is small enough.
                 seen_df = (
-                    df.sparkSession.read.parquet(self.spill_path)
+                    df.sparkSession.read.schema("h string")
+                    .parquet(self.spill_path)
                     .select(F.col("h").alias("_dlt_seen"))
                 )
                 joined = hashed.join(

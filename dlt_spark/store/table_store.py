@@ -13,7 +13,14 @@ provides the same *contract* on plain parquet:
 - ``append`` adds files to a *new* version dir listing prior files via a
   manifest, so appends are O(new data), not O(table);
 - read-modify-write (merge/upsert/scd2) reads snapshot N and commits
-  snapshot N+1 — safe because the input files are immutable.
+  snapshot N+1 — safe because the input files are immutable;
+- every commit records the snapshot's Spark schema (``schema`` in the
+  pointer and the log entry), exactly as a parquet read would infer it,
+  and every read hands it to ``spark.read.schema(...)`` — so opening a
+  table launches no footer-inference job, a string partition column
+  keeps its type, and a column added by a later ``append`` is visible
+  (NULL on older rows).  Snapshots committed without a ``schema`` field
+  still read through inference.
 
 Every operation is expressed through ``df.write.parquet`` /
 ``spark.read.parquet`` so swapping in Delta (``format("delta")`` +
@@ -30,6 +37,7 @@ import tempfile
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 class TableStore:
@@ -111,6 +119,90 @@ def _ranges_overlap(stats: dict, where: List[tuple]) -> bool:
     return True
 
 
+# -- recorded snapshot schemas --
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` as a parquet read reports it: every struct field, array
+    element, map key and map value nullable (Spark's ``asNullable``)."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _snapshot_schema(
+    schema: Optional[T.StructType],
+    partition_by: Optional[List[str]],
+    prev: Optional[dict] = None,
+) -> Optional[dict]:
+    """The JSON schema a commit records.  ``prev`` is the meta of the
+    snapshot an append extends: its fields come first and new ones
+    after (the by-name union), so rows in older files read a new column
+    as NULL.  Partition columns go last, as partition discovery puts
+    them.  ``None`` — the reader falls back to inference — when the
+    schema is unknown, the extended snapshot recorded none, or a column
+    changed type."""
+    if schema is None:
+        return None
+    fields = _nullable(schema).fields
+    if prev and prev.get("paths"):
+        old = _recorded_schema(prev)
+        if old is None:
+            return None
+        new = {f.name: f for f in fields}
+        for f in old.fields:
+            g = new.pop(f.name, None)
+            if g is not None and g.dataType != f.dataType:
+                return None
+        fields = old.fields + [f for f in fields if f.name in new]
+    by_name = {f.name: f for f in fields}
+    parts = [c for c in partition_by or [] if c in by_name]
+    fields = [f for f in fields if f.name not in parts] + [by_name[c] for c in parts]
+    return T.StructType(fields).jsonValue()
+
+
+def _recorded_schema(meta: dict) -> Optional[T.StructType]:
+    s = meta.get("schema")
+    return T.StructType.fromJson(s) if s else None
+
+
+def _arrow_schema(schema, timestamp_ntz: bool) -> Optional[T.StructType]:
+    """Spark schema of a pyarrow-written file as a parquet read infers
+    it, or ``None`` when a type's read-back is not pinned here (a null
+    column reads back as int, nanosecond timestamps and unsigned
+    integers do not round-trip) — that snapshot then reads through
+    inference."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    def pinned(t) -> bool:
+        if pa.types.is_struct(t):
+            return all(pinned(t.field(i).type) for i in range(t.num_fields))
+        if pa.types.is_map(t):
+            return pinned(t.key_type) and pinned(t.item_type)
+        if pa.types.is_list(t) or pa.types.is_large_list(t):
+            return pinned(t.value_type)
+        if pa.types.is_timestamp(t):
+            return t.unit != "ns"
+        return (
+            pa.types.is_string(t) or pa.types.is_large_string(t)
+            or pa.types.is_binary(t) or pa.types.is_large_binary(t)
+            or pa.types.is_boolean(t) or pa.types.is_signed_integer(t)
+            or pa.types.is_float32(t) or pa.types.is_float64(t)
+            or pa.types.is_date32(t) or pa.types.is_decimal128(t)
+        )
+
+    if not all(pinned(f.type) for f in schema):
+        return None
+    return from_arrow_schema(schema, prefer_timestamp_ntz=timestamp_ntz)
+
+
 class ParquetTableStore(TableStore):
     def __init__(
         self,
@@ -147,7 +239,12 @@ class ParquetTableStore(TableStore):
         (time travel), :meth:`history`, and :meth:`changes` possible.
         The pointer flip stays the atomicity point; the log entry is
         written first so a crash between the two leaves no committed
-        version without a log record."""
+        version without a log record.
+
+        ``meta["schema"]`` (from :func:`_snapshot_schema`) is the
+        snapshot's Spark schema as JSON; it lands in both files, so the
+        current read and a time-travel read open their files without
+        inferring the schema from parquet footers."""
         d = self._table_dir(table)
         os.makedirs(d, exist_ok=True)
         log_dir = os.path.join(d, "_log")
@@ -209,61 +306,71 @@ class ParquetTableStore(TableStore):
         as their data dirs do: append chains keep full history; overwrite
         auto-vacuums to current+previous, and :meth:`vacuum` prunes to
         current — past that a versioned read raises."""
-        if version is not None:
+        if version is None:
+            meta = self._current_meta(table)
+            if not meta:
+                raise FileNotFoundError(f"table {table!r} does not exist in {self.root}")
+        else:
             meta = self._log_meta(table, version)
             if meta is None:
                 raise FileNotFoundError(
                     f"table {table!r} has no commit log entry for version {version}"
                 )
-            paths = meta["paths"]
-            missing = [p for p in paths if not os.path.isdir(p)]
+            missing = [p for p in meta["paths"] if not os.path.isdir(p)]
             if missing:
                 raise FileNotFoundError(
                     f"version {version} of table {table!r} was vacuumed "
-                    f"(missing {len(missing)} of {len(paths)} snapshot dirs)"
+                    f"(missing {len(missing)} of {len(meta['paths'])} snapshot dirs)"
                 )
-            if not paths:
-                # empty snapshot (e.g. truncate): serve an empty frame
-                # with the schema of whichever snapshot still has data
-                cur = self._data_paths(table)
-                if cur:
-                    return self.spark.read.parquet(*cur).limit(0)
-                for h in reversed(self.history(table)):
-                    m = self._log_meta(table, h["version"]) or {}
-                    mp = [p for p in (m.get("paths") or []) if os.path.isdir(p)]
-                    if mp:
-                        return self.spark.read.parquet(*mp).limit(0)
-                raise FileNotFoundError(
-                    f"version {version} of table {table!r} is empty and no"
-                    " snapshot with a readable schema remains"
-                )
-            if meta.get("partition_by") and len(paths) > 1:
-                out = self.spark.read.parquet(paths[0])
-                for p in paths[1:]:
-                    out = out.unionByName(
-                        self.spark.read.parquet(p), allowMissingColumns=True
-                    )
-                return out
-            return self.spark.read.parquet(*paths)
-        paths = self._data_paths(table)
+        paths = meta["paths"]
+        schema = _recorded_schema(meta)
         if not paths:
-            raise FileNotFoundError(f"table {table!r} is empty and schemaless")
-        meta = self._current_meta(table) or {}
-        if meta.get("partition_by") and len(paths) > 1:
-            # hive-partitioned version dirs: partition discovery needs one
-            # root per read — union the snapshots
-            out = self.spark.read.parquet(paths[0])
-            for p in paths[1:]:
-                out = out.unionByName(self.spark.read.parquet(p), allowMissingColumns=True)
-            return out
-        if where and not meta.get("partition_by"):
+            if version is None:
+                raise FileNotFoundError(f"table {table!r} is empty and schemaless")
+            if schema is not None:
+                return self.spark.createDataFrame([], schema)
+            return self._inferred_empty(table, version)
+        partitioned = bool(meta.get("partition_by"))
+        if where and version is None and not partitioned:
             pruned = self._prune_paths(paths, where)
             if pruned is not None:
                 if not pruned:
                     # every file skipped: empty frame with the table schema
-                    return self.spark.read.parquet(*paths).limit(0)
-                return self.spark.read.parquet(*pruned)
-        return self.spark.read.parquet(*paths)
+                    return self._scan(paths, schema).limit(0)
+                return self._scan(pruned, schema)
+        return self._scan(paths, schema, partitioned)
+
+    def _scan(
+        self, paths: List[str], schema: Optional[T.StructType], partitioned: bool = False
+    ) -> DataFrame:
+        """Open ``paths`` with the recorded schema (no inference job), or
+        through footer inference when the snapshot recorded none."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        if partitioned and len(paths) > 1:
+            # hive-partitioned version dirs: partition discovery needs one
+            # root per read — union the snapshots
+            out = reader.parquet(paths[0])
+            for p in paths[1:]:
+                out = out.unionByName(reader.parquet(p), allowMissingColumns=True)
+            return out
+        return reader.parquet(*paths)
+
+    def _inferred_empty(self, table: str, version: int) -> DataFrame:
+        """Empty snapshot committed without a recorded schema: serve an
+        empty frame with the schema of whichever snapshot still has
+        data."""
+        cur = self._data_paths(table)
+        if cur:
+            return self.spark.read.parquet(*cur).limit(0)
+        for h in reversed(self.history(table)):
+            m = self._log_meta(table, h["version"]) or {}
+            mp = [p for p in (m.get("paths") or []) if os.path.isdir(p)]
+            if mp:
+                return self.spark.read.parquet(*mp).limit(0)
+        raise FileNotFoundError(
+            f"version {version} of table {table!r} is empty and no"
+            " snapshot with a readable schema remains"
+        )
 
     def skipped_files(self, table: str, where: List[tuple]) -> tuple:
         """(total_files, files_after_pruning) — observability for tests
@@ -294,7 +401,8 @@ class ParquetTableStore(TableStore):
         self._commit(
             table,
             {"version": v, "paths": paths, "partition_by": partition_by,
-             "sort_by": sort_by, "op": "append"},
+             "sort_by": sort_by, "op": "append",
+             "schema": _snapshot_schema(df.schema, partition_by, prev)},
         )
 
     def append_rows(self, rows: List[dict], table: str, schema: "object" = None) -> None:
@@ -308,13 +416,18 @@ class ParquetTableStore(TableStore):
         pq.write_table(tbl, os.path.join(new_dir, "part-00000.parquet"))
         prev = self._current_meta(table)
         paths = (prev["paths"] if prev else []) + [new_dir]
+        ntz = self.spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+        partition_by = (prev or {}).get("partition_by")
         self._commit(
             table,
             {
                 "version": v,
                 "paths": paths,
-                "partition_by": (prev or {}).get("partition_by"),
+                "partition_by": partition_by,
                 "op": "append_rows",
+                "schema": _snapshot_schema(
+                    _arrow_schema(tbl.schema, ntz == "true"), partition_by, prev
+                ),
             },
         )
 
@@ -346,6 +459,7 @@ class ParquetTableStore(TableStore):
                 "sort_by": sort_by,
                 "prev_paths": (prev or {}).get("paths", []),
                 "op": "overwrite",
+                "schema": _snapshot_schema(df.schema, partition_by),
             },
         )
         self._vacuum(table)
@@ -454,6 +568,8 @@ class ParquetTableStore(TableStore):
                     "partition_by": meta.get("partition_by"),
                     "prev_paths": meta.get("paths", []),
                     "op": "truncate",
+                    # the empty snapshot keeps its columns for time travel
+                    "schema": meta.get("schema"),
                 },
             )
 
@@ -549,9 +665,9 @@ class ParquetTableStore(TableStore):
                 return self.read(table, version=to_version).limit(0).withColumn(
                     "_change_type", F.lit("insert")
                 )
-            return self.spark.read.parquet(*added).withColumn(
-                "_change_type", F.lit("insert")
-            )
+            return self._scan(
+                added, _recorded_schema(new_meta), bool(new_meta.get("partition_by"))
+            ).withColumn("_change_type", F.lit("insert"))
         new_df = self.read(table, version=to_version)
         old_df = self.read(table, version=from_version)
         return new_df.exceptAll(old_df).withColumn(
