@@ -26,14 +26,15 @@ import sys
 
 
 def _spark():
+    """The caller's active session when there is one (an in-process call
+    must not rewrite its confs), else a small local CLI session."""
     from pyspark.sql import SparkSession
 
-    return (
-        SparkSession.builder.master("local[2]")
-        .appName("dlt_spark_cli")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    from .session import spark_session
+
+    return SparkSession.getActiveSession() or spark_session(
+        "dlt_spark_cli", master="local[2]", shuffle_partitions=2,
+        overrides={"spark.ui.enabled": "false"},
     )
 
 

@@ -14,8 +14,9 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..load import control
 from ..schema.schema import Schema
-from ..schema.typing import DLT_TABLES, LOADS_TABLE_NAME, STATE_TABLE_NAME, VERSION_TABLE_NAME
+from ..schema.typing import DLT_TABLES, LOADS_TABLE_NAME
 from ..store.table_store import TableStore
 from .relation import Relation
 
@@ -79,10 +80,7 @@ class Dataset:
         return self.table(LOADS_TABLE_NAME)
 
     def load_ids(self, status: Optional[int] = 0) -> List[str]:
-        df = self.loads_table()._df
-        if status is not None:
-            df = df.filter(F.col("status") == status)
-        return [r["load_id"] for r in df.select("load_id").orderBy("load_id").collect()]
+        return control.load_ids(self.store, status)
 
     @property
     def latest_load_id(self) -> Optional[str]:
@@ -150,20 +148,9 @@ def dataset(
     """Standalone dataset access without a pipeline (reference
     ``dlt.dataset(destination, dataset_name)``,
     ``dlt/dataset/dataset.py:457``): open the store read-only and restore
-    the newest committed schema from ``_dlt_version`` when present."""
+    the newest schema version from ``_dlt_version`` when present."""
     from ..store.table_store import ParquetTableStore
 
     spark = spark or SparkSession.builder.getOrCreate()
     store = ParquetTableStore(spark, destination, dataset_name)
-    schema: Optional[Schema] = None
-    if store.exists(VERSION_TABLE_NAME):
-        rows = (
-            store.read(VERSION_TABLE_NAME)
-            .filter(F.col("schema_name") == dataset_name)
-            .orderBy(F.col("version").desc())
-            .limit(1)
-            .collect()
-        )
-        if rows:
-            schema = Schema.from_json(rows[0]["schema"])
-    return Dataset(spark, store, schema)
+    return Dataset(spark, store, control.newest_schema(store, dataset_name))

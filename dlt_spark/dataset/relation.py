@@ -16,13 +16,8 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple, Union
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..schema.typing import (
-    C_DLT_ID,
-    C_DLT_LOAD_ID,
-    C_DLT_PARENT_ID,
-    C_DLT_ROOT_ID,
-    LOADS_TABLE_NAME,
-)
+from ..load import control
+from ..schema.typing import C_DLT_ID, C_DLT_LOAD_ID, C_DLT_PARENT_ID, C_DLT_ROOT_ID
 
 _OPS = {
     "eq": "=",
@@ -251,11 +246,9 @@ class Relation:
         load packages — a semi-join against ``_dlt_loads``."""
         if self._dataset is None:
             raise ValueError("from_loads requires a dataset-bound relation")
-        loads = self._dataset.loads_table()._df
+        loads = control.loads(self._dataset.store, status if load_ids is None else None)
         if load_ids is not None:
             loads = loads.filter(F.col("load_id").isin(list(load_ids)))
-        elif status is not None:
-            loads = loads.filter(F.col("status") == status)
         return self._wrap(
             self._df.join(
                 F.broadcast(loads.select("load_id")),

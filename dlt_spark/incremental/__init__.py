@@ -325,24 +325,10 @@ class Incremental:
 
     def update_state(self, df: DataFrame) -> "Incremental":
         """Compute the new ``last_value`` and boundary pk-hash set from the
-        *loaded* window.  For the builtin max/min cursors this is ONE
-        action (r11, guide §7.3): the 1-row cursor aggregate rides the
-        boundary-hash job as a broadcast join instead of being collected
-        first — halving the per-resource driver round-trips and job count
-        (the old shape was agg.collect() THEN hash collect).  In ``raise``
-        mode the NULL-cursor check piggybacks on the same aggregation
-        (reference raises on NULL cursor values, ``transform.py:249-299``)."""
-        if self._custom_func is None and (
-            self.primary_key or self.range_start == "closed" or self.lag is not None
-        ):
-            return self._update_state_one_action(df)
-        return self._update_state_two_actions(df)
-
-    def _update_state_two_actions(self, df: DataFrame) -> "Incremental":
-        """Reference shape: cursor aggregate collect, then (when boundary
-        dedup is active) a second boundary-hash collect.  Kept for custom
-        ``last_value_func`` cursors and as the fallback of
-        :meth:`_update_state_one_action`."""
+        *loaded* window: the cursor aggregate collect, then (when boundary
+        dedup is active) the boundary-hash collect.  In ``raise`` mode the
+        NULL-cursor check rides the aggregate (reference raises on NULL
+        cursor values, ``transform.py:249-299``)."""
         if self._custom_func is not None:
             new_last, nulls = self._custom_reduce(df)
             if self.on_cursor_value_missing == "raise" and nulls > 0:
@@ -396,69 +382,6 @@ class Incremental:
             else:
                 self._spill_boundary(hash_df)
         return self
-
-    def _update_state_one_action(self, df: DataFrame) -> "Incremental":
-        """max/min-cursor state update as ONE Spark action: the 1-row
-        (cursor max/min, null count) aggregate joins back onto ``df`` as
-        a broadcast to select the boundary rows, so the cursor value, the
-        NULL check, and the boundary hash sample all come out of a single
-        collect.  Value-identical to the two-action path: the combined
-        boundary ``greatest/least(agg, previous last_value)`` is the same
-        comparison the driver did in Python, evaluated in-plan."""
-        agg_fn = F.max if self.last_value_func == "max" else F.min
-        comb = F.greatest if self.last_value_func == "max" else F.least
-        keys = self._dedup_keys(df.columns)
-        try:
-            stats = df.agg(
-                agg_fn(F.col(self.cursor_path)).alias("_dlt_vraw"),
-                F.sum(F.col(self.cursor_path).isNull().cast("long")).alias("_dlt_nulls"),
-            )
-            nl = (
-                comb(F.col("_dlt_vraw"), F.lit(self.last_value))
-                if self.last_value is not None
-                else F.col("_dlt_vraw")
-            )
-            stats = stats.select(nl.alias("_dlt_nl"), "_dlt_nulls")
-            joined = df.join(
-                F.broadcast(stats), F.col(self.cursor_path) == F.col("_dlt_nl")
-            )
-            sample = (
-                joined.select(
-                    "_dlt_nl",
-                    "_dlt_nulls",
-                    key_hash(*[F.col(k) for k in keys]).alias("h"),
-                )
-                .distinct()
-                .limit(self.boundary_hash_limit + 1)
-                .collect()
-            )
-        except Exception:
-            # analysis-time type mismatch between the cursor column and
-            # the lit() of a restored last_value (exotic cursor types):
-            # fall back to the reference two-action shape
-            return self._update_state_two_actions(df)
-        if sample:
-            nulls = sample[0]["_dlt_nulls"] or 0
-            if self.on_cursor_value_missing == "raise" and nulls > 0:
-                raise ValueError(
-                    f"cursor column {self.cursor_path!r} has {nulls} NULL"
-                    " values; set on_cursor_value_missing to 'include' or 'exclude'"
-                )
-            self.last_value = sample[0]["_dlt_nl"]
-            if len(sample) <= self.boundary_hash_limit:
-                self.boundary_hashes = sorted(r["h"] for r in sample)
-                self.boundary_spilled = False
-            else:
-                self._spill_boundary(
-                    joined.select(
-                        key_hash(*[F.col(k) for k in keys]).alias("h")
-                    ).distinct()
-                )
-            return self
-        # no boundary rows came back: df is empty, the cursor is all-NULL,
-        # or (min/max asymmetry) no row sits at the combined boundary —
-        # resolve with the plain stats collect (rare path)
-        return self._update_state_two_actions(df)
 
     def _spill_boundary(self, hash_df: DataFrame) -> None:
         """Coarse cursor (e.g. a date column over billions of rows): spill

@@ -15,7 +15,8 @@ write is one distributed Spark action.  What remains ours:
   ``when/otherwise`` so the split is JVM-side and vectorized;
 - **atomic visibility**: data tables commit first, the ``_dlt_loads`` row
   last; readers that filter through ``from_loads`` never see a partial
-  package (reference ``load.py:605``, ``utils.py:1352``).
+  package (reference ``load.py:605``, ``utils.py:1352``).  The control
+  rows' formats and the committed-load rule live in ``control.py``.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ from ..schema.typing import (
     TTableSchema,
 )
 from ..store.table_store import TableStore
+from . import control
 from . import dispositions as D
 
 
@@ -384,68 +386,23 @@ class LoadStage:
             else:
                 self.write_table(child_df, {"name": child_name, "parent": root_name}, load_id)
 
-    # -- commit protocol --
-
-    # control-plane commits are driver-side single-row appends (reference
-    # emits plain INSERTs here, load.py:605) — launching a distributed
-    # write job per metadata row would serialize ~1s of scheduler overhead
-    # into every load package
+    # -- commit protocol (row formats and commit rule: control.py) --
 
     def commit_load(self, load_id: str, status: int = 0) -> None:
-        import datetime as dt
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [
-                ("load_id", pa.string()),
-                ("schema_name", pa.string()),
-                ("status", pa.int32()),
-                ("schema_version_hash", pa.string()),
-                ("inserted_at", pa.timestamp("us", tz="UTC")),
-            ]
-        )
-        self.store.append_rows(
-            [
-                {
-                    "load_id": load_id,
-                    "schema_name": self.schema.name,
-                    "status": status,
-                    "schema_version_hash": self.schema.version_hash,
-                    "inserted_at": dt.datetime.now(dt.timezone.utc),
-                }
-            ],
-            LOADS_TABLE_NAME,
-            schema,
-        )
+        control.append(self.store, LOADS_TABLE_NAME, {
+            "load_id": load_id,
+            "schema_name": self.schema.name,
+            "status": status,
+            "schema_version_hash": self.schema.version_hash,
+        })
 
     def commit_schema(self) -> None:
-        import datetime as dt
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [
-                ("version", pa.int32()),
-                ("version_hash", pa.string()),
-                ("schema_name", pa.string()),
-                ("schema", pa.string()),
-                ("inserted_at", pa.timestamp("us", tz="UTC")),
-            ]
-        )
-        self.store.append_rows(
-            [
-                {
-                    "version": self.schema.version,
-                    "version_hash": self.schema.version_hash,
-                    "schema_name": self.schema.name,
-                    "schema": self.schema.to_json(),
-                    "inserted_at": dt.datetime.now(dt.timezone.utc),
-                }
-            ],
-            VERSION_TABLE_NAME,
-            schema,
-        )
+        control.append(self.store, VERSION_TABLE_NAME, {
+            "version": self.schema.version,
+            "version_hash": self.schema.version_hash,
+            "schema_name": self.schema.name,
+            "schema": self.schema.to_json(),
+        })
 
 
 def _has_nondeterministic_plan(df: DataFrame) -> bool:

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..dataset.dataset import Dataset
 from ..incremental import Incremental
+from ..load import control
 from ..load.load import LoadStage
 from ..normalize.relational import RelationalNormalizer
 from ..schema.schema import Schema
@@ -397,12 +398,7 @@ class Pipeline:
         report = run_checks(self.store.read(table_name), checks)
         rows = report.collect()  # tiny: one row per check
         if store_report:
-            load_id = None
-            try:
-                load_id = self.dataset().latest_load_id
-            except Exception:
-                pass
-            persist_report(self.store, rows, table_name, load_id)
+            persist_report(self.store, rows, table_name, self.dataset().latest_load_id)
         if raise_on_failure:
             failed = [r for r in rows if not r["passed"]]
             if failed:
@@ -679,32 +675,18 @@ def attach(
 ) -> Pipeline:
     """Attach to a pipeline previously run against ``destination``
     (reference ``dlt.attach``, ``dlt/pipeline/__init__.py:185``): the
-    schema comes back from the newest committed ``_dlt_version`` row and
+    schema comes back from the newest ``_dlt_version`` row and
     the state (incremental cursors, user state) from
     ``_dlt_pipeline_state`` — no sources need re-declaring; the next
     ``run()`` resumes exactly where the last one committed."""
-    from ..schema.typing import VERSION_TABLE_NAME
-
     pipe = Pipeline(pipeline_name, destination, dataset_name, spark)
-    if not pipe.store.exists(VERSION_TABLE_NAME):
+    schema = control.newest_schema(pipe.store, dataset_name)
+    if schema is None:
         raise CannotAttachPipeline(
-            f"no schema history at {destination!r}/{dataset_name!r} —"
+            f"no schema named {dataset_name!r} at {destination!r} —"
             " nothing to attach to"
         )
-    from pyspark.sql import functions as F
-
-    rows = (
-        pipe.store.read(VERSION_TABLE_NAME)
-        .filter(F.col("schema_name") == dataset_name)
-        .orderBy(F.col("version").desc())
-        .limit(1)
-        .collect()
-    )
-    if not rows:
-        raise CannotAttachPipeline(
-            f"no schema named {dataset_name!r} at {destination!r}"
-        )
-    pipe.schema = Schema.from_json(rows[0]["schema"])
+    pipe.schema = schema
     return pipe
 
 

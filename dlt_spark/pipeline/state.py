@@ -3,7 +3,8 @@
 Re-expression of ``dlt/pipeline/state_sync.py:95-139`` and the
 ``_dlt_pipeline_state`` table (``dlt/common/schema/utils.py:1398``): a
 versioned JSON blob appended once per state change; restore reads the
-highest version.  Holds incremental cursors and arbitrary
+highest committed version.  The row format and the committed-load rule
+live in ``load/control.py``.  Holds incremental cursors and arbitrary
 ``dlt.current.state()``-style user state.
 """
 
@@ -15,6 +16,7 @@ from typing import Any, Dict, Optional
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..load import control
 from ..schema.typing import STATE_TABLE_NAME
 from ..store.table_store import TableStore
 
@@ -36,67 +38,33 @@ class PipelineState:
     # -- persistence --
 
     def persist(self, spark: SparkSession, store: TableStore, load_id: str) -> None:
-        import datetime as dt
-
-        import pyarrow as pa
-
         self.version += 1
-        schema = pa.schema(
-            [
-                ("version", pa.int32()),
-                ("pipeline_name", pa.string()),
-                ("state", pa.string()),
-                ("_dlt_load_id", pa.string()),
-                ("created_at", pa.timestamp("us", tz="UTC")),
-            ]
-        )
-        # driver-side control-plane append — no distributed job for one row
-        store.append_rows(
-            [
-                {
-                    "version": self.version,
-                    "pipeline_name": self.pipeline_name,
-                    "state": json.dumps(self.state, default=str),
-                    "_dlt_load_id": load_id,
-                    "created_at": dt.datetime.now(dt.timezone.utc),
-                }
-            ],
-            STATE_TABLE_NAME,
-            schema,
-        )
+        control.append(store, STATE_TABLE_NAME, {
+            "version": self.version,
+            "pipeline_name": self.pipeline_name,
+            "state": json.dumps(self.state, default=str),
+            "_dlt_load_id": load_id,
+        })
 
     @classmethod
     def restore(
         cls, store: TableStore, pipeline_name: str
     ) -> Optional["PipelineState"]:
         """Restore the newest COMMITTED state: only rows whose
-        ``_dlt_load_id`` appears in ``_dlt_loads`` count.  A crash between
-        the state append and the loads-row commit leaves an orphan state
-        row; honoring it would advance the cursor past a package readers
+        ``_dlt_load_id`` is a committed load count.  A crash between the
+        state append and the loads-row commit leaves an orphan state row;
+        honoring it would advance the cursor past a package readers
         consider uncommitted, silently dropping those rows forever
         (reference keeps state inside the load package so the two commit
         together — this filter is the equivalent guarantee)."""
-        from ..schema.typing import LOADS_TABLE_NAME
-
-        if not store.exists(STATE_TABLE_NAME):
-            return None
-        df = store.read(STATE_TABLE_NAME).filter(
-            F.col("pipeline_name") == pipeline_name
+        row = control.newest(
+            store, STATE_TABLE_NAME,
+            (F.col("pipeline_name") == pipeline_name)
+            & F.col("_dlt_load_id").isin(control.load_ids(store)),
         )
-        if store.exists(LOADS_TABLE_NAME):
-            committed = (
-                store.read(LOADS_TABLE_NAME)
-                .filter(F.col("status") == 0)
-                .select(F.col("load_id").alias("_dlt_load_id"))
-                .distinct()
-            )
-            df = df.join(F.broadcast(committed), on="_dlt_load_id", how="left_semi")
-        else:
-            return None
-        rows = df.orderBy(F.col("version").desc()).limit(1).collect()
-        if not rows:
+        if row is None:
             return None
         st = cls(pipeline_name)
-        st.version = rows[0]["version"]
-        st.state = json.loads(rows[0]["state"])
+        st.version = row["version"]
+        st.state = json.loads(row["state"])
         return st

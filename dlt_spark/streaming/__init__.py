@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..incremental import Incremental
+from ..load import control
 from ..pipeline.pipeline import LoadInfo, Pipeline
 
 
@@ -263,11 +264,7 @@ class StreamingPipeline:
             # after a sink failure finds its id already committed in
             # `_dlt_loads` and becomes a no-op instead of a double load
             lid = self._batch_load_id(batch_id)
-            try:
-                committed = set(self.pipe.dataset().load_ids())
-            except FileNotFoundError:
-                committed = set()  # first batch: no _dlt_loads yet
-            if lid in committed:
+            if lid in control.load_ids(self.pipe.store):
                 return
             self.pipe.run(
                 batch_df, table_name=table_name, write_disposition=write_disposition,
@@ -396,10 +393,7 @@ def _sync_dedup_index(
     # candidate lids come from pipeline METADATA (tiny), not a corpus
     # scan; lids that loaded other tables yield empty generations plus a
     # marker, so each is reconciled exactly once
-    try:
-        all_lids = set(pipe.dataset().load_ids())
-    except FileNotFoundError:
-        all_lids = set()
+    all_lids = set(control.load_ids(pipe.store))
     missing = sorted(all_lids - have)
     if missing:
         data = store.read(table_name)
@@ -511,11 +505,7 @@ def dedup_ingest(
         from pyspark.sql import functions as F
 
         lid = f"dstream-{stream_id}-{batch_id:012d}"
-        try:
-            committed = set(pipe.dataset().load_ids())
-        except FileNotFoundError:
-            committed = set()
-        if lid in committed:
+        if lid in control.load_ids(pipe.store):
             return
         fresh = drop_exact_dups(batch_df, id_col, text_col)
         # explicit existence check, NOT a broad except: a read/schema
@@ -603,11 +593,7 @@ def sample_ingest(
         from pyspark.sql import functions as F
 
         lid = f"sstream-{stream_id}-{batch_id:012d}"
-        try:
-            committed = set(pipe.dataset().load_ids())
-        except FileNotFoundError:
-            committed = set()
-        if lid in committed:
+        if lid in control.load_ids(pipe.store):
             return
         cand = batch_df
         if table_name in pipe.store.list_tables():
@@ -673,11 +659,7 @@ def decayed_ingest(
         from pyspark.sql import functions as F
 
         lid = f"dcstream-{stream_id}-{batch_id:012d}"
-        try:
-            committed = set(pipe.dataset().load_ids())
-        except FileNotFoundError:
-            committed = set()
-        if lid in committed:
+        if lid in control.load_ids(pipe.store):
             return
         batch = batch_df.filter(
             F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()

@@ -1,5 +1,5 @@
 """CLI smoke tests: run a pipeline, then drive every `pipeline` command
-in-process (the CLI reuses the active Spark session via getOrCreate)."""
+in-process (the CLI reuses the caller's active Spark session)."""
 
 import pytest
 
@@ -20,6 +20,17 @@ def test_cli_info(loaded, capsys):
     out = capsys.readouterr().out
     assert "items: 2 rows" in out
     assert "latest load id:" in out
+
+
+def test_cli_keeps_the_callers_session_confs(spark, loaded):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        assert main(["pipeline", "clip", "info", "--destination", loaded, "--dataset", "ds"]) == 0
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_cli_trace(loaded, capsys):

@@ -2,6 +2,7 @@
 (reference tests/extract/test_incremental.py, test_lag.py)."""
 
 import datetime as dt
+import decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -256,3 +257,54 @@ def test_tuple_cursor_rehydrates_element_types(spark):
     assert inc2.last_value == (dt2.date(2024, 2, 1), 5)
     assert isinstance(inc2.last_value[0], dt2.date)
     assert isinstance(inc2.last_value[1], int)
+
+
+def test_update_state_on_empty_window_keeps_state(spark):
+    inc = Incremental("v", primary_key=["id"], initial_value=5)
+    inc.boundary_hashes = ["seen"]
+    inc.update_state(spark.createDataFrame([], "id long, v long"))
+    assert inc.last_value == 5
+    assert inc.boundary_hashes == ["seen"]
+
+
+def test_update_state_lag_window_behind_cursor(spark):
+    """A lag re-read whose newest row is older than ``last_value`` never
+    moves the cursor back; no window row sits at the cursor, so the
+    boundary set is empty."""
+    inc = Incremental("v", primary_key=["id"], initial_value=100, lag=10)
+    inc.boundary_hashes = ["seen"]
+    window = inc.apply(spark.createDataFrame([(1, 85), (2, 90), (3, 95)], "id long, v long"))
+    assert {r["id"] for r in window.collect()} == {2, 3}
+    inc.update_state(window)
+    assert inc.last_value == 100
+    assert inc.boundary_hashes == []
+
+
+@pytest.mark.parametrize(
+    "ddl, values",
+    [
+        ("date", [dt.date(2024, 1, d) for d in (1, 2, 2, 3)]),
+        ("timestamp", [dt.datetime(2024, 1, 1, h) for h in (1, 2, 2, 3)]),
+        ("decimal(10,2)", [decimal.Decimal(x) for x in ("1.10", "2.20", "2.20", "3.30")]),
+    ],
+)
+def test_restored_cursor_types_update_state(spark, ddl, values):
+    """date / datetime / Decimal cursors survive to_state -> JSON ->
+    restore_state and keep advancing: the restored value filters the
+    next window, dedups its boundary rows and compares with the new max."""
+    import json
+
+    df = spark.createDataFrame(list(enumerate(values)), f"id long, c {ddl}")
+    first = Incremental("c", primary_key=["id"])
+    first.update_state(df.filter(F.col("id") < 3))  # up to the tied middle value
+    assert first.last_value == values[1] and len(first.boundary_hashes) == 2
+
+    inc = Incremental("c", primary_key=["id"]).restore_state(
+        json.loads(json.dumps(first.to_state()))
+    )
+    assert inc.last_value == values[1] and type(inc.last_value) is type(values[1])
+    window = inc.apply(df)
+    assert {r["id"] for r in window.collect()} == {3}
+    inc.update_state(window)
+    assert inc.last_value == values[3] and type(inc.last_value) is type(values[3])
+    assert len(inc.boundary_hashes) == 1
