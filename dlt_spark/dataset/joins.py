@@ -220,25 +220,19 @@ def point_in_time_join(
     scd2 writer's retirement boundary.
 
     Scale shape: dimensions are versions-per-key-sized — orders of
-    magnitude smaller than facts — but "smaller" is not "broadcastable":
-    ``broadcast_dim=None`` (default) hints the dim side only when
-    Catalyst's size estimate is already under the session broadcast
-    threshold (:func:`~dlt_spark.load.dispositions.broadcast_if_small`
-    — an oversized scd2 dimension would otherwise OOM every executor).
-    Pass True to force the hint regardless of size, or False to leave
-    the planner alone: the equi-key part of the predicate still drives
-    a shuffled hash join with the interval as a post-filter — never a
+    magnitude smaller than facts — but "smaller" is not "broadcastable".
+    ``broadcast_dim=None`` (default) and ``False`` both leave the choice
+    to the planner: Catalyst broadcasts the dim when its size estimate is
+    under ``spark.sql.autoBroadcastJoinThreshold`` and AQE can still
+    convert at runtime, so an oversized scd2 dimension is never forced
+    onto every executor.  Pass True to force the hint regardless of
+    size.  Without a broadcast, the equi-key part of the predicate
+    drives a shuffled join with the interval as a post-filter — never a
     cartesian."""
     if how not in ("inner", "left"):
         raise ValueError(f"point_in_time_join supports inner/left, got {how!r}")
     on = list(on)
-    d = dim
-    if broadcast_dim:
-        d = F.broadcast(d)
-    elif broadcast_dim is None:
-        from ..load.dispositions import broadcast_if_small
-
-        d = broadcast_if_small(d)
+    d = F.broadcast(dim) if broadcast_dim else dim
     cond = [fact[k] == d[k] for k in on]
     cond.append(fact[ts_col] >= d[valid_from])
     cond.append(d[valid_to].isNull() | (fact[ts_col] < d[valid_to]))

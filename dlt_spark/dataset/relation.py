@@ -243,19 +243,22 @@ class Relation:
         self, load_ids: Optional[Sequence[str]] = None, status: Optional[int] = 0
     ) -> "Relation":
         """Restrict to rows from the given (or all successfully completed)
-        load packages — a semi-join against ``_dlt_loads``."""
+        load packages — a semi-join against ``_dlt_loads``.  A nested
+        table has no load id of its own: its rows follow their root's
+        (:meth:`with_load_id_col`)."""
         if self._dataset is None:
             raise ValueError("from_loads requires a dataset-bound relation")
         loads = control.loads(self._dataset.store, status if load_ids is None else None)
         if load_ids is not None:
             loads = loads.filter(F.col("load_id").isin(list(load_ids)))
-        return self._wrap(
-            self._df.join(
-                F.broadcast(loads.select("load_id")),
-                on=self._df[C_DLT_LOAD_ID] == loads["load_id"],
-                how="left_semi",
-            )
+        nested = C_DLT_LOAD_ID not in self._df.columns
+        df = self.with_load_id_col()._df if nested else self._df
+        kept = df.join(
+            F.broadcast(loads.select("load_id")),
+            on=df[C_DLT_LOAD_ID] == loads["load_id"],
+            how="left_semi",
         )
+        return self._wrap(kept.drop(C_DLT_LOAD_ID) if nested else kept)
 
     def with_load_id_col(self, col_name: str = "_dlt_load_id") -> "Relation":
         """Expose the load id on any table of a chain (reference
@@ -276,11 +279,9 @@ class Relation:
         )
         link = C_DLT_ROOT_ID if C_DLT_ROOT_ID in self._df.columns else C_DLT_PARENT_ID
         # the id->load_id map is the whole root table projected to 2
-        # columns — broadcastable for small dims only, so size-gate it
-        from ..load.dispositions import broadcast_if_small
-
+        # columns; the planner picks the join strategy from its size
         joined = self._df.join(
-            broadcast_if_small(root), on=self._df[link] == root["__root_id"], how="left"
+            root, on=self._df[link] == root["__root_id"], how="left"
         ).drop("__root_id")
         return self._wrap(joined)
 

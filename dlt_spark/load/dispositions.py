@@ -12,11 +12,11 @@ function) and avoid the full rewrite.
 Scale design:
 
 - key sets are projected to the key columns *before* joining, so the
-  build side of every semi/anti join is narrow; the broadcast hint is
-  **size-gated** (:func:`broadcast_if_small`): hinted only when the plan
-  estimate is under the session broadcast threshold — a full-backfill
-  staging batch (or a destination-derived hash set) falls back to AQE's
-  runtime strategy instead of force-broadcasting the driver into OOM;
+  build side of every semi/anti join is narrow; the join strategy is
+  left to the planner: Catalyst broadcasts a side whose estimate is under
+  ``spark.sql.autoBroadcastJoinThreshold``, and AQE converts a shuffle
+  join to broadcast at runtime when a key set turns out small — a
+  full-backfill staging batch is never force-broadcast;
 - dedup uses a single window (one shuffle on the key), identical to the
   reference's ``ROW_NUMBER() OVER (PARTITION BY pk ORDER BY dedup_sort)``;
 - nothing ever collects to the driver.
@@ -24,7 +24,6 @@ Scale design:
 
 from __future__ import annotations
 
-import re
 from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -43,50 +42,6 @@ def _key_cols(keys: Sequence[str]) -> List[Column]:
     return [F.col(k) for k in keys]
 
 
-def broadcast_if_small(keyset: DataFrame) -> DataFrame:
-    """Broadcast-hint a narrow key/hash set only when it is actually small.
-
-    The common case (micro-batch staging ≪ destination) wants the static
-    hint — it skips exchange planning on the probe side entirely.  But the
-    same code path sees full-backfill batches and destination-derived hash
-    sets, where a hardcoded ``F.broadcast`` is the first driver OOM at
-    100x scale.
-
-    The gate costs ZERO extra jobs: hint only when Catalyst's upper-bound
-    size estimate for the plan is already under the session's broadcast
-    threshold (the planner would broadcast such a side from its own stats
-    anyway — the hint just pins the choice against estimate drift).  Any
-    bigger or unknown estimate (e.g. a LogicalRDD from a checkpointed
-    micro-batch reports Long.Max) returns the key set unhinted: AQE
-    converts the join to broadcast at runtime from REAL shuffle sizes
-    when the side turns out small, and keeps a shuffle join when it
-    doesn't — which is exactly the safe behavior at 100 TB.  An earlier
-    draft persisted+counted inconclusive key sets; the extra job + cache
-    pressure per merge measurably regressed the bench and bought nothing
-    AQE doesn't already provide.
-    """
-    threshold = 10 * 1024 * 1024  # spark.sql.autoBroadcastJoinThreshold default
-    try:
-        try:
-            # no default arg: Spark 4 type-validates the default value
-            thr = keyset.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        except Exception:
-            thr = ""
-        m = re.match(r"^(-?\d+)\s*([kmgt]?b?)$", (thr or "").strip().lower())
-        if m:
-            mult = {"": 1, "b": 1, "k": 1024, "kb": 1024, "m": 1024**2,
-                    "mb": 1024**2, "g": 1024**3, "gb": 1024**3,
-                    "t": 1024**4, "tb": 1024**4}[m.group(2)]
-            threshold = int(m.group(1)) * mult
-        raw = keyset._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        est = int(raw if isinstance(raw, int) else raw.toString())
-    except Exception:
-        return keyset
-    if 0 < est <= threshold:
-        return F.broadcast(keyset)
-    return keyset
-
-
 def dedup_staging(
     staging: DataFrame,
     primary_key: Sequence[str],
@@ -97,11 +52,21 @@ def dedup_staging(
     arbitrary-but-deterministic otherwise (reference
     ``sql_jobs.py:257-327``: ``ROW_NUMBER ... ORDER BY dedup_sort`` with
     ``(SELECT NULL)`` fallback; we order by the key itself for
-    determinism)."""
+    determinism).
+
+    ``staging`` may still carry its nested lists (the pipeline dedups a
+    package before the normalizer explodes them): lists take part in the
+    order like any other column, maps through their JSON text (Spark can
+    neither sort nor hash a map)."""
+    def sortable(c: str) -> Column:
+        if "map<" in staging.schema[c].dataType.simpleString():
+            return F.to_json(F.col(c))
+        return F.col(c)
+
     if dedup_sort:
         order = [F.col(dedup_sort).desc() if sort_desc else F.col(dedup_sort).asc()]
         # tiebreak deterministically so reruns produce identical tables
-        order += [F.col(c).asc() for c in staging.columns if c != dedup_sort]
+        order += [sortable(c).asc() for c in staging.columns if c != dedup_sort]
     else:
         # the reference picks arbitrarily here (ORDER BY (SELECT NULL));
         # we pick deterministically but cheaply: one 8-byte hash sort key
@@ -110,11 +75,13 @@ def dedup_staging(
         # scale).  _dlt system columns are excluded — _dlt_load_id (and
         # a random-strategy _dlt_id) change per run, and hashing them
         # would flip the winner between identical reruns.  Rows equal on
-        # all data columns are interchangeable, so hash ties are safe.
+        # all data columns are interchangeable; the row id only breaks
+        # their tie, so every evaluation over the same pinned package
+        # keeps the same row (and hence the same nested rows).
         data_cols = [c for c in staging.columns if not c.startswith("_dlt_")]
-        order = [
-            F.xxhash64(*[F.col(c) for c in data_cols or staging.columns]).asc()
-        ]
+        order = [F.xxhash64(*[sortable(c) for c in data_cols or staging.columns]).asc()]
+        if C_DLT_ID in staging.columns:
+            order.append(F.col(C_DLT_ID).asc())
     w = Window.partitionBy(*_key_cols(primary_key)).orderBy(*order)
     return (
         staging.withColumn("_dlt_rn", F.row_number().over(w))
@@ -162,7 +129,7 @@ def merge_delete_insert(
         # deleting by _dlt_id never matching) — keep dest + staging
         return dest.unionByName(insert)
     staging_keys = staging.select(*keys).distinct()
-    survivors = dest.join(broadcast_if_small(staging_keys), on=keys, how="left_anti")
+    survivors = dest.join(staging_keys, on=keys, how="left_anti")
     return survivors.unionByName(insert)
 
 
@@ -175,7 +142,7 @@ def delete_child_rows(
     ``_dlt_id``) column."""
     key = deleted_root_ids.columns[0]
     ids = deleted_root_ids.withColumnRenamed(key, C_DLT_ROOT_ID).distinct()
-    return child_dest.join(broadcast_if_small(ids), on=C_DLT_ROOT_ID, how="left_anti")
+    return child_dest.join(ids, on=C_DLT_ROOT_ID, how="left_anti")
 
 
 def merge_upsert(
@@ -198,7 +165,7 @@ def merge_upsert(
         return upserts
     upserts = upserts.select(*dest.columns)
     staging_keys = staging.select(*primary_key).distinct()
-    untouched = dest.join(broadcast_if_small(staging_keys), on=list(primary_key), how="left_anti")
+    untouched = dest.join(staging_keys, on=list(primary_key), how="left_anti")
     return untouched.unionByName(upserts)
 
 
@@ -216,10 +183,17 @@ def merge_insert_only(
     staging = dedup_staging(staging, primary_key, dedup_sort)
     if dest is None:
         return staging
-    new_rows = staging.join(
+    return dest.unionByName(new_key_rows(dest, staging, primary_key).select(*dest.columns))
+
+
+def new_key_rows(
+    dest: DataFrame, staging: DataFrame, primary_key: Sequence[str]
+) -> DataFrame:
+    """The staging rows an insert-only merge inserts: those whose key is
+    not in ``dest``."""
+    return staging.join(
         dest.select(*primary_key).distinct(), on=list(primary_key), how="left_anti"
-    ).select(*dest.columns)
-    return dest.unionByName(new_rows)
+    )
 
 
 def scd2_apply(
@@ -281,11 +255,10 @@ def scd2_apply(
     staging_hashes = hashed.select(row_hash_col).distinct()
 
     # retire: active rows whose hash vanished from the snapshot
-    staging_hashes = broadcast_if_small(staging_hashes)
     to_retire = active.join(staging_hashes, on=row_hash_col, how="left_anti")
     if merge_key:
         staging_mk = hashed.select(*merge_key).distinct()
-        to_retire = to_retire.join(broadcast_if_small(staging_mk), on=list(merge_key), how="left_semi")
+        to_retire = to_retire.join(staging_mk, on=list(merge_key), how="left_semi")
         kept_active = active.join(
             to_retire.select(row_hash_col), on=row_hash_col, how="left_anti"
         )
@@ -294,7 +267,7 @@ def scd2_apply(
     retired = to_retire.withColumn(valid_to_col, boundary)
 
     active_hashes = active.select(row_hash_col).distinct()
-    inserts = new_version.join(broadcast_if_small(active_hashes), on=row_hash_col, how="left_anti")
+    inserts = new_version.join(active_hashes, on=row_hash_col, how="left_anti")
 
     cols = dest.columns
     return (

@@ -7,7 +7,14 @@ Spark makes free: there are no file jobs or worker pools — each table's
 write is one distributed Spark action.  What remains ours:
 
 - **table-chain ordering** (root before nested, reference
-  ``sql_jobs.py:48-75``);
+  ``sql_jobs.py:48-75``), over tables normalized from one package that
+  the pipeline pins once (reference ``dlt/extract/extract.py`` package
+  storage) — every write reads the same rows and the same random ids;
+- **nested rows follow their roots**: the pipeline decides a package's
+  root rows before their lists explode (contracts, one row per merge
+  key); a root write that drops more rows (hard deletes, insert-only's
+  existing keys) returns the rows it lands, and nested rows follow
+  exactly those roots by ``_dlt_root_id``;
 - **variant columns**: when an incoming batch's column type conflicts
   with the stored table, rows that survive ``try_cast`` stay in the
   column and the rest land in ``col__v_<type>`` (reference
@@ -21,14 +28,14 @@ write is one distributed Spark action.  What remains ours:
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schema.schema import Schema
-from ..schema.spark_types import from_spark_type, to_spark_type
+from ..schema.spark_types import from_spark_type
 from ..schema.typing import (
     C_DLT_ROOT_ID,
     LOADS_TABLE_NAME,
@@ -111,25 +118,34 @@ class LoadStage:
 
     # -- single-table write with disposition --
 
+    def conform(
+        self, df: DataFrame, table: TTableSchema
+    ) -> Tuple[DataFrame, Optional[DataFrame]]:
+        """``df`` as the stored ``table`` takes it (json columns parsed,
+        types aligned, the ``data_type`` contract applied, which may drop
+        rows) and the stored table, if any.  Conforming twice changes
+        nothing: under a ``discard_row`` contract the pipeline conforms
+        root rows before deciding them."""
+        df = self._cast_json_variant(df, table)
+        name = table["name"]
+        if not self.store.exists(name):
+            return df, None
+        dest = self.store.read(name)
+        return self._apply_data_type_contract(align_with_variants(df, dest), dest, name), dest
+
     def write_table(
-        self,
-        df: DataFrame,
-        table: TTableSchema,
-        load_id: str,
-        staging_of_chain: Optional[Dict[str, DataFrame]] = None,
-    ) -> None:
+        self, df: DataFrame, table: TTableSchema, load_id: str
+    ) -> Optional[DataFrame]:
+        """Write ``df`` into ``table`` under its disposition.  Returns the
+        rows of ``df`` this write lands when a merge's hard deletes or
+        insert-only's key test drop some, else ``None`` (every row
+        lands)."""
         name = table["name"]
         disposition = table.get("write_disposition", "append")
         if disposition == "skip":
-            return
-        df = self._cast_json_variant(df, table)
+            return None
         partition_by = _hint_cols(table, "partition") or None
-        exists = self.store.exists(name)
-        dest = self.store.read(name) if exists else None
-
-        if dest is not None:
-            df = align_with_variants(df, dest)
-            df = self._apply_data_type_contract(df, dest, name)
+        df, dest = self.conform(df, table)
 
         # `cluster` hint (reference typing.py:76,188 — the BigQuery/
         # Snowflake clustering column) → GLOBAL range clustering at write
@@ -181,21 +197,28 @@ class LoadStage:
                 self.store.append(
                     df.select(*dest.columns), name, partition_by=partition_by, sort_by=present_sort
                 )
-            return
+            return None
         if disposition == "replace":
             self.store.overwrite(
                 D.replace_table(df), name, partition_by=partition_by, sort_by=present_sort
             )
-            return
+            return None
         if disposition == "merge":
             strategy = table.get("x_merge_strategy", "delete-insert")
             pk = _hint_cols(table, "primary_key")
             mk = _hint_cols(table, "merge_key")
             dedup_sort = _first_hint_col(table, "dedup_sort")
             hard_delete = _first_hint_col(table, "hard_delete")
+            if strategy in ("upsert", "insert-only") and not pk:
+                raise ValueError(f"{strategy} on {name!r} requires a primary_key")
             evolved = dest is not None and bool(set(df.columns) - set(dest.columns))
             if evolved:
                 dest = union_evolved(dest, df.limit(0))
+            landed = None
+            if strategy == "insert-only" and dest is not None:
+                landed = D.new_key_rows(dest, df, pk)
+            elif strategy in ("delete-insert", "upsert") and hard_delete:
+                landed = D.apply_hard_delete(df, hard_delete)
             # lakehouse fast path: a store exposing row-level `upsert`
             # (Delta/Iceberg MERGE INTO) applies upsert/insert-only as
             # ONE logged merge touching only matched files — at 100 TB
@@ -220,22 +243,18 @@ class LoadStage:
                     staging, name, join_cols=pk,
                     when_matched_update_all=(strategy == "upsert"),
                 )
-                return
+                return landed
             if strategy == "delete-insert":
                 result = D.merge_delete_insert(
                     dest, df, primary_key=pk or None, merge_key=mk or None,
                     dedup_sort=dedup_sort, hard_delete_col=hard_delete,
                 )
             elif strategy == "upsert":
-                if not pk:
-                    raise ValueError(f"upsert on {name!r} requires a primary_key")
                 result = D.merge_upsert(
                     dest, df, primary_key=pk, dedup_sort=dedup_sort,
                     hard_delete_col=hard_delete,
                 )
             elif strategy == "insert-only":
-                if not pk:
-                    raise ValueError(f"insert-only on {name!r} requires a primary_key")
                 result = D.merge_insert_only(dest, df, primary_key=pk, dedup_sort=dedup_sort)
             elif strategy == "scd2":
                 result = D.scd2_apply(
@@ -249,7 +268,7 @@ class LoadStage:
                 self.store.append(result, name, partition_by=partition_by)
             else:
                 self.store.overwrite(result, name, partition_by=partition_by)
-            return
+            return landed
         raise ValueError(f"unknown write disposition {disposition!r}")
 
     def _apply_data_type_contract(
@@ -293,74 +312,42 @@ class LoadStage:
         self, tables: Dict[str, DataFrame], root_table: TTableSchema, load_id: str
     ) -> None:
         """Write a root table and its nested child tables in ancestry
-        order.  For delete-insert merges, child rows of replaced roots are
-        removed by ``_dlt_root_id`` before the child batch is appended
-        (reference root-key delete, ``sql_jobs.py:550-739``)."""
+        order.  ``tables`` are normalized from one pinned package whose
+        root rows the pipeline already decided (contracts, one row per
+        merge key), so every nested row belongs to exactly one root row.
+        When the root write drops rows (a merge's hard deletes,
+        insert-only's existing keys), a child carrying ``_dlt_root_id``
+        keeps only the rows of the roots that land.  For delete-insert
+        and upsert merges, child rows of replaced roots are removed by
+        ``_dlt_root_id`` before the child batch is appended (reference
+        root-key delete, ``sql_jobs.py:550-739``)."""
         root_name = root_table["name"]
         if root_name not in tables:
             return  # whole batch discarded by a schema contract
         disposition = root_table.get("write_disposition", "append")
         strategy = root_table.get("x_merge_strategy", "delete-insert")
-
-        # Materialize the package ONCE before any multi-action consumption.
-        # The normalized batch can carry a nondeterministic uuid() _dlt_id
-        # (row_id_type='random'); below we evaluate the same lineage in
-        # several independent actions (root write, surviving_root_ids, each
-        # child write).  Without pinning, a task retry or shuffle-order
-        # change re-rolls the uuids and children silently vanish through
-        # the _dlt_root_id semi-join.  This is the Spark analog of the
-        # reference materializing extracted packages to files before load
-        # (dlt/extract/extract.py package storage).  localCheckpoint cuts
-        # lineage and freezes the computed rows; on a real cluster set
-        # spark.checkpoint.dir + use reliable checkpoints if executor loss
-        # during a load is a concern.  Single-table chains evaluate the
-        # batch in exactly one action, and content-hash ids (key_hash /
-        # row_hash) are deterministic by construction — both skip the
-        # checkpoint cost.
-        if len(tables) > 1 and any(_has_nondeterministic_plan(v) for v in tables.values()):
-            tables = {k: v.localCheckpoint(eager=True) for k, v in tables.items()}
+        keyed = disposition == "merge" and strategy in ("delete-insert", "upsert", "insert-only")
         root_df = tables[root_name]
 
         deleted_root_ids: Optional[DataFrame] = None
-        surviving_root_ids: Optional[DataFrame] = None
-        if disposition == "merge" and strategy in ("delete-insert", "upsert", "insert-only"):
-            pk = _hint_cols(root_table, "primary_key")
-            keys = pk or _hint_cols(root_table, "merge_key")
-            dedup_sort = _first_hint_col(root_table, "dedup_sort")
-            hard_delete = _first_hint_col(root_table, "hard_delete")
-            # the staging roots that actually land (post dedup + hard
-            # delete) — only *their* children may be inserted (reference
-            # gen_merge_sql inserts children via _dlt_root_id IN deduped)
-            deduped = D.dedup_staging(root_df, pk, dedup_sort) if pk else root_df
-            if strategy == "insert-only" and pk and self.store.exists(root_name):
-                deduped = deduped.join(
-                    self.store.read(root_name).select(*pk).distinct(),
-                    on=pk, how="left_anti",
-                )
-            surviving_root_ids = D.apply_hard_delete(deduped, hard_delete).select(
-                F.col("_dlt_id").alias(C_DLT_ROOT_ID)
-            ).distinct()
-            if keys and self.store.exists(root_name):
-                dest_root = self.store.read(root_name)
-                # roots being replaced or deleted in this load
-                deleted_root_ids = (
-                    dest_root.join(
-                        D.broadcast_if_small(root_df.select(*keys).distinct()),
-                        on=keys, how="left_semi",
-                    ).select("_dlt_id")
-                )
+        keys = _hint_cols(root_table, "primary_key") or _hint_cols(root_table, "merge_key")
+        if keyed and keys and self.store.exists(root_name):
+            # roots being replaced or deleted in this load
+            deleted_root_ids = (
+                self.store.read(root_name)
+                .join(root_df.select(*keys).distinct(), on=keys, how="left_semi")
+                .select("_dlt_id")
+            )
 
-        self.write_table(root_df, root_table, load_id)
+        landed = self.write_table(root_df, root_table, load_id)
 
         for child_name, child_df in tables.items():
             if child_name == root_name:
                 continue
-            if disposition == "merge" and strategy in ("delete-insert", "upsert", "insert-only"):
-                if surviving_root_ids is not None and C_DLT_ROOT_ID in child_df.columns:
-                    child_df = child_df.join(
-                        D.broadcast_if_small(surviving_root_ids),
-                        on=C_DLT_ROOT_ID, how="left_semi",
-                    ).dropDuplicates(["_dlt_id"])
+            if landed is not None and C_DLT_ROOT_ID in child_df.columns:
+                ids = landed.select(F.col("_dlt_id").alias(C_DLT_ROOT_ID))
+                child_df = child_df.join(ids, on=C_DLT_ROOT_ID, how="left_semi")
+            if keyed:
                 if self.store.exists(child_name):
                     dest_child = self.store.read(child_name)
                     if strategy != "insert-only" and deleted_root_ids is not None and C_DLT_ROOT_ID in dest_child.columns:
@@ -403,17 +390,6 @@ class LoadStage:
             "schema_name": self.schema.name,
             "schema": self.schema.to_json(),
         })
-
-
-def _has_nondeterministic_plan(df: DataFrame) -> bool:
-    """True when the plan contains expressions that re-roll on
-    re-evaluation (uuid/rand/monotonically_increasing_id) — only then is
-    pinning via checkpoint required for multi-action consistency."""
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return True  # cannot prove determinism — pin to be safe
-    return "uuid(" in plan or "rand(" in plan or "monotonically_increasing_id(" in plan
 
 
 def _hint_cols(table: TTableSchema, hint: str) -> List[str]:

@@ -172,6 +172,23 @@ class RelationalNormalizer:
         primary_key: Optional[Sequence[str]] = None,
     ) -> Dict[str, DataFrame]:
         root_name = self.naming.normalize_table_identifier(table_name)
+        out: Dict[str, DataFrame] = {}
+        self._normalize_level(
+            self.root_rows(df, load_id, row_id_type, primary_key), root_name, out, is_root=True
+        )
+        return out
+
+    def root_rows(
+        self,
+        df: DataFrame,
+        load_id: Optional[str] = None,
+        row_id_type: str = "random",
+        primary_key: Optional[Sequence[str]] = None,
+    ) -> DataFrame:
+        """The root rows as :meth:`normalize` sees them before it explodes
+        lists: structs flattened, ``_dlt_id`` and ``_dlt_load_id`` added
+        (an existing column is kept).  Normalizing this frame again yields
+        the same tables, so a caller can filter root rows in between."""
         df = flatten_structs(df, self.naming, self.max_nesting)
 
         if C_DLT_ID not in df.columns:
@@ -187,10 +204,7 @@ class RelationalNormalizer:
             df = df.withColumn(C_DLT_ID, rid)
         if load_id is not None and C_DLT_LOAD_ID not in df.columns:
             df = df.withColumn(C_DLT_LOAD_ID, F.lit(load_id))
-
-        out: Dict[str, DataFrame] = {}
-        self._normalize_level(df, root_name, out, is_root=True)
-        return out
+        return df
 
     # -- internals --
 

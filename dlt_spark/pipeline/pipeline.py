@@ -3,8 +3,9 @@
 Re-expression of ``dlt.Pipeline`` (``dlt/pipeline/pipeline.py:428-774``)
 collapsed to Spark's execution model (SURVEY §3.1 "Spark shape"): extract
 and normalize are DataFrame construction + the relational normalizer (no
-intermediate file packages, no process pools — Spark tasks are the
-parallelism); load is the disposition write + the ``_dlt_loads`` commit.
+process pools — Spark tasks are the parallelism; the package is pinned
+once with a local checkpoint instead of written to files); load is the
+disposition write + the ``_dlt_loads`` commit.
 The three-stage *API* (``extract()/normalize()/load()`` infos) is kept
 for surface parity.
 """
@@ -22,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..dataset.dataset import Dataset
 from ..incremental import Incremental
 from ..load import control
-from ..load.load import LoadStage
+from ..load import dispositions as D
+from ..load.load import LoadStage, _first_hint_col, _hint_cols
 from ..normalize.relational import RelationalNormalizer
 from ..schema.schema import Schema
 from ..schema.spark_types import from_spark_type
@@ -62,13 +64,13 @@ class ExtractInfo:
 @dataclass
 class NormalizeInfo:
     """Normalize-stage result: per root table, the normalized chain
-    ({table: DataFrame}) plus the registered root schema."""
+    ({table: DataFrame}), the registered root schema and the pinned
+    package the chain was normalized from (``None`` when unpinned).  A
+    successful load unpins the packages and empties ``chains``;
+    ``table_names`` stays."""
 
-    chains: List = field(default_factory=list)  # [(DltResource, TTableSchema, {table: df})]
-
-    @property
-    def table_names(self) -> List[str]:
-        return [t for _, _, tables in self.chains for t in tables]
+    chains: List = field(default_factory=list)  # [(DltResource, TTableSchema, {table: df}, package)]
+    table_names: List[str] = field(default_factory=list)
 
 
 class DataQualityError(RuntimeError):
@@ -320,9 +322,9 @@ class Pipeline:
             for res, tables in extract_info.resources:
                 for tname, df in tables.items():
                     root = self._normalize_and_register(res, tname, df, load_id, boundary_timestamp)
-                    info.chains.append((res, root["schema"], root.pop("__tables__")))
+                    info.chains.append((res, root["schema"], root["__tables__"], root["package"]))
+                    info.table_names.extend(root["__tables__"])
             info.load_id = load_id  # type: ignore[attr-defined]
-            info.extract_info = extract_info  # type: ignore[attr-defined]
             self._pending_normalize = info
             st.step_info = info
         return info
@@ -340,30 +342,27 @@ class Pipeline:
                 json_as_variant=self.json_as_variant,
             )
             info = LoadInfo(self.pipeline_name, load_id, self.dataset_name)
-            seen_inc = set()
-            for res, root_schema, tables in norm_info.chains:
+            for res, root_schema, tables, package in norm_info.chains:
                 loader.write_chain(tables, root_schema, load_id)
                 info.tables.extend(tables.keys())
-                if res.incremental is not None and id(res) not in seen_inc:
-                    seen_inc.add(id(res))
+                if res.incremental is not None:
                     if res.incremental.spill_path is None:
                         store_root = getattr(self.store, "root", None)
                         if store_root is not None:
                             res.incremental.spill_path = os.path.join(
                                 store_root, "_dlt_incremental_boundary", res.name
                             )
-                    extract_info = getattr(norm_info, "extract_info", None)
-                    if extract_info is not None:
-                        for r2, raw_tables in extract_info.resources:
-                            if r2 is res:
-                                for df in raw_tables.values():
-                                    res.incremental.update_state(res.incremental.apply(df))
+                    res.incremental.update_state(package)
                     rstate = self.state.resource_state(self.dataset_name, res.name)
                     rstate["incremental"] = res.incremental.to_state()
             self.schema.bump_version()
             loader.commit_schema()
             self.state.persist(self.spark, self.store, load_id)
             loader.commit_load(load_id, status=0)
+            for *_, package in norm_info.chains:
+                if package is not None:
+                    _unpin(package)
+            norm_info.chains.clear()
             self._pending_extract = None
             self._pending_normalize = None
             self._export_schema()
@@ -504,6 +503,19 @@ class Pipeline:
         )
         if res.incremental is not None:
             df = res.incremental.apply(df)
+        # the load package, evaluated once: when more than one action
+        # reads it (the cursor update, a write per nested table) it is
+        # pinned, so every action sees the same rows and random `_dlt_id`s
+        # (reference: extract materializes each package to storage before
+        # load); a flat package without a cursor is read by one write
+        package = None
+        if res.incremental is not None or "array<" in df.schema.simpleString():
+            df = package = df.localCheckpoint(eager=True)
+        root_name = self.schema.naming.normalize_table_identifier(table_name)
+        _cols = {
+            **(res.columns if isinstance(res.columns, dict) else {}),
+            **(_ov.get("columns") or {}),
+        }
 
         # row-id strategy per merge strategy (reference helpers.py:107-120:
         # delete-insert -> random, upsert -> key_hash, scd2 -> row_hash)
@@ -518,45 +530,8 @@ class Pipeline:
             max_nesting=res.max_table_nesting or self.schema.settings.get("max_nesting", 100),
             root_key=disposition == "merge",
         )
-        tables = normalizer.normalize(
-            df,
-            table_name,
-            load_id=load_id,
-            row_id_type=row_id_type,
-            primary_key=_pk,
-        )
-
-        root_name = self.schema.naming.normalize_table_identifier(table_name)
-
-        # x_embed column hints (vector_adapter): materialize
-        # <col>__embedding siblings on the root before registration —
-        # one projection, JVM-side, no shuffle
-        embed_cols = [
-            c.get("name")
-            for c in (res.columns or {}).values()
-            if isinstance(c, dict) and c.get("x_embed")
-        ]
-        if embed_cols:
-            from ..dataops.vector import embed_columns, hash_embedding
-
-            embedder = getattr(res, "_embedder", None) or hash_embedding
-            tables[root_name] = embed_columns(tables[root_name], embed_cols, embedder)
-
-        # preferred types by name regex -> cast before registration
-        # (reference preferred_types, schema.py:626)
-        if self.schema.settings.get("preferred_types"):
-            from ..schema.spark_types import to_spark_type
-
-            for tname_, df_ in list(tables.items()):
-                casts = {}
-                for f in df_.schema.fields:
-                    pref = self.schema.preferred_type(f.name)
-                    if pref:
-                        want = to_spark_type({"data_type": pref})
-                        if want != f.dataType:
-                            casts[f.name] = df_[f.name].cast(want)
-                if casts:
-                    tables[tname_] = df_.withColumns(casts)
+        rows = normalizer.root_rows(df, load_id=load_id, row_id_type=row_id_type, primary_key=_pk)
+        tables = self._normalize_rows(normalizer, rows, table_name, root_name, res)
 
         cols = []
         root_df = tables[root_name]
@@ -567,10 +542,6 @@ class Pipeline:
                 c["primary_key"] = True
             if _mk and f.name in _mk:
                 c["merge_key"] = True
-            _cols = {
-                **(res.columns if isinstance(res.columns, dict) else {}),
-                **(_ov.get("columns") or {}),
-            }
             for user_col in _cols.values():
                 if user_col.get("name") == f.name:
                     c.update(user_col)
@@ -586,10 +557,26 @@ class Pipeline:
             resource=res.name,
         )
         registered = self.schema.update_table(tbl)
-        enforced = self._enforce_contract(tables[root_name], root_name)
-        if enforced is None:
-            return {"schema": registered, "__tables__": {}}
-        tables[root_name] = enforced
+        # the one decision of which root rows land, made before their
+        # lists explode so that nested rows come from exactly these rows:
+        # the root's contracts drop rows (`data_type` only under
+        # discard_row; its other modes shape columns at load), then a
+        # keyed merge keeps one row per key (the winner the merge's own
+        # dedup keeps)
+        decided = self._enforce_contract(rows, root_name, tables[root_name].columns)
+        if decided is None:
+            return {"schema": registered, "__tables__": {}, "package": package}
+        if self.schema.resolve_contract(root_name)["data_type"] == "discard_row":
+            loader = LoadStage(self.spark, self.store, self.schema, json_as_variant=self.json_as_variant)
+            decided, _ = loader.conform(decided, registered)
+        pk = _hint_cols(registered, "primary_key")
+        if disposition == "merge" and strategy in ("delete-insert", "upsert", "insert-only") and pk:
+            decided = D.dedup_staging(decided, pk, _first_hint_col(registered, "dedup_sort"))
+        if decided is not rows:
+            tables = self._normalize_rows(normalizer, decided, table_name, root_name, res)
+        # columns derived after the decision (x_embed siblings) meet the
+        # columns contract here
+        tables[root_name] = self._enforce_contract(tables[root_name], root_name)
         # nested (child-table) hints: keys may be the nested path
         # relative to the root ("items", "items__sub") or the full
         # normalized child table name (reference make_hints nested_hints)
@@ -627,9 +614,48 @@ class Pipeline:
                 tables.pop(child_name)
             else:
                 tables[child_name] = child_enforced
-        return {"schema": registered, "__tables__": tables}
+        return {"schema": registered, "__tables__": tables, "package": package}
 
-    def _enforce_contract(self, df: DataFrame, table_name: str):
+    def _normalize_rows(self, normalizer: RelationalNormalizer, rows: DataFrame,
+                        table_name: str, root_name: str, res: DltResource) -> Dict[str, DataFrame]:
+        """Explode root rows into their table chain, with the root's
+        x_embed siblings and the preferred column types applied."""
+        tables = normalizer.normalize(rows, table_name)
+
+        # x_embed column hints (vector_adapter): materialize
+        # <col>__embedding siblings on the root before registration —
+        # one projection, JVM-side, no shuffle
+        embed_cols = [
+            c.get("name")
+            for c in (res.columns or {}).values()
+            if isinstance(c, dict) and c.get("x_embed")
+        ]
+        if embed_cols:
+            from ..dataops.vector import embed_columns, hash_embedding
+
+            embedder = getattr(res, "_embedder", None) or hash_embedding
+            tables[root_name] = embed_columns(tables[root_name], embed_cols, embedder)
+
+        # preferred types by name regex -> cast before registration
+        # (reference preferred_types, schema.py:626)
+        if self.schema.settings.get("preferred_types"):
+            from ..schema.spark_types import to_spark_type
+
+            for tname_, df_ in list(tables.items()):
+                casts = {}
+                for f in df_.schema.fields:
+                    pref = self.schema.preferred_type(f.name)
+                    if pref:
+                        want = to_spark_type({"data_type": pref})
+                        if want != f.dataType:
+                            casts[f.name] = df_[f.name].cast(want)
+                if casts:
+                    tables[tname_] = df_.withColumns(casts)
+        return tables
+
+    def _enforce_contract(
+        self, df: DataFrame, table_name: str, data_cols: Optional[Sequence[str]] = None
+    ):
         """Apply contract decisions to the *data* (reference
         ``schema.py:177-318`` applied in ``jsonl.py:89-215``):
 
@@ -638,14 +664,19 @@ class Pipeline:
         - unregistered columns under ``columns: discard_value`` -> columns
           dropped; under ``discard_row`` -> rows carrying a non-NULL value
           in any offending column are dropped, then the columns.
-        ``freeze`` already raised during registration."""
+        ``freeze`` already raised during registration.  ``data_cols``
+        limits the check to the table's columns when ``df`` is a root's
+        rows that still carry their nested lists."""
         contract = self.schema.resolve_contract(table_name)
         if table_name not in self.schema.tables:
             if contract["tables"] in ("discard_row", "discard_value"):
                 return None
             return df
         reg_cols = set(self.schema.tables[table_name].get("columns", {}))
-        extras = [c for c in df.columns if c not in reg_cols]
+        extras = [
+            c for c in df.columns
+            if c not in reg_cols and (data_cols is None or c in data_cols)
+        ]
         if not extras:
             return df
         mode = contract["columns"]
@@ -660,6 +691,13 @@ class Pipeline:
         if mode in ("discard_row", "discard_value"):
             df = df.drop(*extras)
         return df
+
+
+def _unpin(package: DataFrame) -> None:
+    """Free the blocks a ``localCheckpoint`` pin holds on the executors.
+    PySpark has no public call for it: the pinned plan is a
+    ``LogicalRDD`` over the checkpointed RDD, which is unpersisted."""
+    package._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 class CannotAttachPipeline(Exception):

@@ -5,10 +5,11 @@ against; they are defaults, not requirements — any existing session
 works, and ``overrides`` wins.
 
 - **AQE on, with skew-join and partition coalescing.**  The engine
-  leans on runtime re-planning: size-gated broadcast decisions
-  (``load/dispositions.py broadcast_if_small``) defer to AQE's
-  real-shuffle-size conversion, and residual hot keys in the dedup /
-  merge joins are AQE skew-split.
+  leans on runtime re-planning: merge key-set joins carry no broadcast
+  hint, so a side the static estimate cannot size (a pinned load
+  package) is broadcast by AQE's real-shuffle-size conversion when it
+  is small, and residual hot keys in the dedup / merge joins are AQE
+  skew-split.
 - **Shuffle sizing by data, not a magic number.**  AQE's advisory
   partition size (128 MiB) does the real work; the static
   ``shuffle.partitions`` is just the pre-AQE upper bound — set it to

@@ -146,14 +146,14 @@ def test_point_in_time_join_versions(spark):
 
 
 def test_point_in_time_join_broadcast_gate(spark):
-    """broadcast_dim=None is SIZE-GATED (ADVICE r8): small dims get the
-    hint, an over-threshold dim is left to the planner/AQE; True forces
-    the hint regardless."""
+    """broadcast_dim=None leaves the join strategy to the planner: a
+    small dim is broadcast from Catalyst's own estimate with no hint, an
+    over-threshold dim is not; True forces the hint regardless."""
     from dlt_spark.dataset.joins import point_in_time_join
 
     # dim must come from a source with REAL Catalyst stats (spark.range)
-    # — a createDataFrame LogicalRDD reports Long.Max and the gate
-    # correctly refuses to hint it at any threshold
+    # — a createDataFrame LogicalRDD reports Long.Max and the planner
+    # never broadcasts it from its estimate
     dim = spark.range(2).selectExpr(
         "id AS k", "CAST(id AS STRING) AS tier",
         "TIMESTAMP'2024-01-01' AS _dlt_valid_from",
@@ -166,14 +166,20 @@ def test_point_in_time_join_broadcast_gate(spark):
     def _opt(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
 
-    # small dim under default threshold: hinted
-    assert "strategy=broadcast" in _opt(point_in_time_join(fact, dim, ["k"], "ts"))
+    def _plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    # small dim under default threshold: the planner broadcasts, unhinted
+    small = point_in_time_join(fact, dim, ["k"], "ts")
+    assert "strategy=broadcast" not in _opt(small), _opt(small)
+    assert "BroadcastHashJoin" in _plan(small), _plan(small)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
     try:
-        # over-threshold estimate: default must NOT force the hint
+        # over-threshold estimate: nothing forces a broadcast
         gated = point_in_time_join(fact, dim, ["k"], "ts")
         assert "strategy=broadcast" not in _opt(gated), _opt(gated)
+        assert "BroadcastHashJoin" not in _plan(gated), _plan(gated)
         # explicit True still forces it
         forced = point_in_time_join(fact, dim, ["k"], "ts", broadcast_dim=True)
         assert "strategy=broadcast" in _opt(forced)

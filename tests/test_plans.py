@@ -56,29 +56,6 @@ def test_merge_key_join_broadcasts(spark, orders):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
 
 
-def test_broadcast_gate_both_ways(spark, orders):
-    """broadcast_if_small hints under the limit and falls back to AQE
-    above it — a full-backfill staging batch must not be force-broadcast."""
-    from dlt_spark.load.dispositions import broadcast_if_small
-
-    keys = orders.select("o_orderkey").distinct()
-    hinted = orders.join(broadcast_if_small(keys), on="o_orderkey", how="left_semi")
-    assert "strategy=broadcast" in _opt(hinted), _opt(hinted)
-    # simulate a huge build side: shrink the broadcast threshold so the
-    # stats estimate is over it -> the forced hint must NOT be applied
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-    try:
-        big = orders.join(
-            broadcast_if_small(orders.select("o_orderkey").distinct()),
-            on="o_orderkey", how="left_semi",
-        )
-        # NO forced broadcast hint — strategy is left to AQE/stats
-        assert "strategy=broadcast" not in _opt(big), _opt(big)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_normalize_has_no_shuffle(spark):
     """Flatten + explode must be narrow: zero Exchange nodes."""
     from dlt_spark.normalize.relational import RelationalNormalizer
