@@ -138,25 +138,22 @@ def _closing_probe(
         in ("long", "integer", "short", "byte")
         for c in ("u", "v")
     )
-    n_edges = lo = hi = None
-    try:
-        if integral:
-            stats = oriented.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min(F.least("u", "v")).alias("lo"),
-                F.max(F.greatest("u", "v")).alias("hi"),
-            ).collect()[0]
-            n_edges, lo, hi = stats["n"], stats["lo"], stats["hi"]
-        else:
-            n_edges = oriented.count()
-    except Exception:
-        n_edges = None
+    lo = hi = None
+    if integral:
+        stats = oriented.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.least("u", "v")).alias("lo"),
+            F.max(F.greatest("u", "v")).alias("hi"),
+        ).collect()[0]
+        n_edges, lo, hi = stats["n"], stats["lo"], stats["hi"]
+    else:
+        n_edges = oriented.count()
     if lo is not None and hi is not None and lo >= 0 and hi <= _PACK_MAX:
         pk = _pack_pair
         closing = oriented.select(pk("u", "v").alias("_pk"))
         if with_flag:
             closing = closing.withColumn("_closed", F.lit(1))
-        if n_edges is not None and n_edges <= EDGE_BROADCAST_LIMIT:
+        if n_edges <= EDGE_BROADCAST_LIMIT:
             closing = F.broadcast(closing)
         return (
             wedges.withColumn("_pk", pk("v", "w"))
@@ -166,7 +163,7 @@ def _closing_probe(
     closing = oriented.select(F.col("u").alias("v"), F.col("v").alias("w"))
     if with_flag:
         closing = closing.withColumn("_closed", F.lit(1))
-    if n_edges is not None and n_edges <= EDGE_BROADCAST_LIMIT:
+    if n_edges <= EDGE_BROADCAST_LIMIT:
         closing = F.broadcast(closing)
     return wedges.join(closing, ["v", "w"], how)
 
@@ -1012,10 +1009,7 @@ def link_prediction(
         .filter(F.col("_i") < F.col("_j"))
     )
     c6 = F.expr("_w6 div deg").alias("_c6")
-    try:
-        n_edges = und.count()
-    except Exception:
-        n_edges = None
+    n_edges = und.count()
     if packable:
         # single-long candidate key: least in the high 32 bits (bijective
         # on the gated 31-bit non-negative domain), unpacked after the
@@ -1031,7 +1025,7 @@ def link_prediction(
             )
         )
         existing = und.select(_pack_pair("a", "b").alias("_pk"))
-        if n_edges is not None and n_edges <= EDGE_BROADCAST_LIMIT:
+        if n_edges <= EDGE_BROADCAST_LIMIT:
             existing = F.broadcast(existing)
         cand = (
             scores.join(existing, "_pk", "left_anti")
@@ -1055,7 +1049,7 @@ def link_prediction(
         F.sum("_c6").alias("ra_score_q6"),
     )
     existing = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    if n_edges is not None and n_edges <= EDGE_BROADCAST_LIMIT:
+    if n_edges <= EDGE_BROADCAST_LIMIT:
         existing = F.broadcast(existing)
     cand = scores.join(existing, ["x", "y"], "left_anti")
     return cand.orderBy(

@@ -21,6 +21,7 @@ factory plus persisted cursor state:
 from __future__ import annotations
 
 import datetime as dt
+import math
 from dataclasses import dataclass, field
 from typing import Any, Callable, List, Optional, Sequence
 
@@ -474,14 +475,7 @@ class Incremental:
 
 
 def _is_null(v: Any) -> bool:
-    if v is None:
-        return True
-    try:
-        import math
-
-        return isinstance(v, float) and math.isnan(v)
-    except Exception:
-        return False
+    return v is None or (isinstance(v, float) and math.isnan(v))
 
 
 def _norm_val(v: Any) -> Any:

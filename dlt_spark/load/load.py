@@ -10,6 +10,14 @@ write is one distributed Spark action.  What remains ours:
   ``sql_jobs.py:48-75``), over tables normalized from one package that
   the pipeline pins once (reference ``dlt/extract/extract.py`` package
   storage) — every write reads the same rows and the same random ids;
+- **one write path**: every table of a package, root or nested, meets
+  its stored table through :meth:`LoadStage.conform` and is written by
+  one disposition dispatch; a nested table's disposition derives from
+  its root's.  All tables are conformed before the first write, so a
+  frozen contract anywhere in the package raises with the store
+  untouched.  A write that only adds rows (append, insert-only's new
+  keys, scd2's new nested rows) is a ``store.append``, which evolves the
+  stored schema by name instead of rewriting the table;
 - **nested rows follow their roots**: the pipeline decides a package's
   root rows before their lists explode (contracts, one row per merge
   key); a root write that drops more rows (hard deletes, insert-only's
@@ -18,8 +26,10 @@ write is one distributed Spark action.  What remains ours:
 - **variant columns**: when an incoming batch's column type conflicts
   with the stored table, rows that survive ``try_cast`` stay in the
   column and the rest land in ``col__v_<type>`` (reference
-  ``jsonl.py:355-394``) — implemented with ``try_cast`` +
-  ``when/otherwise`` so the split is JVM-side and vectorized;
+  ``jsonl.py:355-394``), in nested tables as in roots — implemented with
+  ``try_cast`` + ``when/otherwise`` so the split is JVM-side and
+  vectorized; the root's ``data_type`` contract governs them in every
+  table of its chain (reference ``schema.py:331``);
 - **atomic visibility**: data tables commit first, the ``_dlt_loads`` row
   last; readers that filter through ``from_loads`` never see a partial
   package (reference ``load.py:605``, ``utils.py:1352``).  The control
@@ -37,6 +47,7 @@ from pyspark.sql import types as T
 from ..schema.schema import Schema
 from ..schema.spark_types import from_spark_type
 from ..schema.typing import (
+    C_DLT_ID,
     C_DLT_ROOT_ID,
     LOADS_TABLE_NAME,
     VERSION_TABLE_NAME,
@@ -80,11 +91,6 @@ def align_with_variants(df: DataFrame, existing: DataFrame) -> DataFrame:
         if name not in aligned.columns:
             aligned = aligned.withColumn(name, F.lit(None).cast(want))
     return aligned
-
-
-def union_evolved(existing: DataFrame, batch: DataFrame) -> DataFrame:
-    """Union with schema evolution: new columns appear as NULL on old rows."""
-    return existing.unionByName(batch, allowMissingColumns=True)
 
 
 class LoadStage:
@@ -136,16 +142,23 @@ class LoadStage:
     def write_table(
         self, df: DataFrame, table: TTableSchema, load_id: str
     ) -> Optional[DataFrame]:
-        """Write ``df`` into ``table`` under its disposition.  Returns the
+        """Conform ``df`` to the stored ``table`` and write it under its
+        disposition (one table; :meth:`write_chain` writes a package,
+        conforming all its tables first).  Returns the
         rows of ``df`` this write lands when a merge's hard deletes or
         insert-only's key test drop some, else ``None`` (every row
         lands)."""
+        if table.get("write_disposition", "append") == "skip":
+            return None
+        return self._write(*self.conform(df, table), table, load_id)
+
+    def _write(
+        self, df: DataFrame, dest: Optional[DataFrame], table: TTableSchema, load_id: str
+    ) -> Optional[DataFrame]:
+        """:meth:`write_table` of a ``df`` already conformed to ``dest``."""
         name = table["name"]
         disposition = table.get("write_disposition", "append")
-        if disposition == "skip":
-            return None
         partition_by = _hint_cols(table, "partition") or None
-        df, dest = self.conform(df, table)
 
         # `cluster` hint (reference typing.py:76,188 — the BigQuery/
         # Snowflake clustering column) → GLOBAL range clustering at write
@@ -187,16 +200,7 @@ class LoadStage:
                 df = df.sortWithinPartitions(*present_sort)
 
         if disposition == "append":
-            if dest is None:
-                self.store.append(df, name, partition_by=partition_by, sort_by=present_sort)
-            elif set(df.columns) != set(dest.columns):
-                self.store.overwrite(
-                    union_evolved(dest, df), name, partition_by=partition_by, sort_by=present_sort
-                )
-            else:
-                self.store.append(
-                    df.select(*dest.columns), name, partition_by=partition_by, sort_by=present_sort
-                )
+            self.store.append(df, name, partition_by=partition_by, sort_by=present_sort)
             return None
         if disposition == "replace":
             self.store.overwrite(
@@ -211,39 +215,38 @@ class LoadStage:
             hard_delete = _first_hint_col(table, "hard_delete")
             if strategy in ("upsert", "insert-only") and not pk:
                 raise ValueError(f"{strategy} on {name!r} requires a primary_key")
-            evolved = dest is not None and bool(set(df.columns) - set(dest.columns))
-            if evolved:
-                dest = union_evolved(dest, df.limit(0))
+            if strategy == "insert-only":
+                # the pipeline keeps one row per key: the rows of new keys
+                # are all this write adds
+                landed = None if dest is None else D.new_key_rows(dest, df, pk)
+                self.store.append(
+                    df if landed is None else landed, name,
+                    partition_by=partition_by, sort_by=present_sort,
+                )
+                return landed
             landed = None
-            if strategy == "insert-only" and dest is not None:
-                landed = D.new_key_rows(dest, df, pk)
-            elif strategy in ("delete-insert", "upsert") and hard_delete:
+            if strategy in ("delete-insert", "upsert") and hard_delete:
                 landed = D.apply_hard_delete(df, hard_delete)
             # lakehouse fast path: a store exposing row-level `upsert`
-            # (Delta/Iceberg MERGE INTO) applies upsert/insert-only as
-            # ONE logged merge touching only matched files — at 100 TB
-            # the difference between a snapshot commit and rewriting the
+            # (Delta/Iceberg MERGE INTO) applies an upsert as ONE logged
+            # merge touching only matched files — at 100 TB the
+            # difference between a snapshot commit and rewriting the
             # whole table through overwrite().  Guarded to the cases
             # whose semantics the generic path and MERGE share exactly:
             # no hard-delete flag (needs WHEN MATCHED ... THEN DELETE)
             # and no in-flight schema evolution.
             if (
-                strategy in ("upsert", "insert-only")
-                and pk
+                strategy == "upsert"
                 and dest is not None
-                and not evolved
                 and hard_delete is None
                 and set(df.columns) == set(dest.columns)
                 and hasattr(self.store, "upsert")
             ):
-                staging = D.dedup_staging(
-                    df.select(*dest.columns), pk, dedup_sort
-                )
-                self.store.upsert(
-                    staging, name, join_cols=pk,
-                    when_matched_update_all=(strategy == "upsert"),
-                )
-                return landed
+                self.store.upsert(df.select(*dest.columns), name, join_cols=pk)
+                return None
+            if dest is not None and set(df.columns) - set(dest.columns):
+                # new columns appear as NULL on the stored rows
+                dest = dest.unionByName(df.limit(0), allowMissingColumns=True)
             if strategy == "delete-insert":
                 result = D.merge_delete_insert(
                     dest, df, primary_key=pk or None, merge_key=mk or None,
@@ -254,8 +257,6 @@ class LoadStage:
                     dest, df, primary_key=pk, dedup_sort=dedup_sort,
                     hard_delete_col=hard_delete,
                 )
-            elif strategy == "insert-only":
-                result = D.merge_insert_only(dest, df, primary_key=pk, dedup_sort=dedup_sort)
             elif strategy == "scd2":
                 result = D.scd2_apply(
                     dest, df,
@@ -315,63 +316,52 @@ class LoadStage:
         order.  ``tables`` are normalized from one pinned package whose
         root rows the pipeline already decided (contracts, one row per
         merge key), so every nested row belongs to exactly one root row.
-        When the root write drops rows (a merge's hard deletes,
-        insert-only's existing keys), a child carrying ``_dlt_root_id``
-        keeps only the rows of the roots that land.  For delete-insert
-        and upsert merges, child rows of replaced roots are removed by
-        ``_dlt_root_id`` before the child batch is appended (reference
-        root-key delete, ``sql_jobs.py:550-739``)."""
+
+        Every table is conformed to its stored table before the first
+        write, so a frozen contract on any of them raises with the store
+        untouched.  A nested table is written under a disposition derived
+        from the root's (:func:`_nested_table`).  When the root write
+        drops rows (a merge's hard deletes, insert-only's existing keys),
+        a child carrying ``_dlt_root_id`` keeps only the rows of the
+        roots that land.  For delete-insert and upsert merges, child rows
+        of replaced roots are removed by ``_dlt_root_id`` before the
+        child batch is added (reference root-key delete,
+        ``sql_jobs.py:550-739``)."""
         root_name = root_table["name"]
-        if root_name not in tables:
-            return  # whole batch discarded by a schema contract
         disposition = root_table.get("write_disposition", "append")
+        if root_name not in tables or disposition == "skip":
+            return  # whole batch discarded by a schema contract, or skipped
         strategy = root_table.get("x_merge_strategy", "delete-insert")
-        keyed = disposition == "merge" and strategy in ("delete-insert", "upsert", "insert-only")
-        root_df = tables[root_name]
+        conformed = {}
+        for name, df in tables.items():
+            table = root_table if name == root_name else _nested_table(
+                self.schema.tables[name], disposition, strategy
+            )
+            conformed[name] = (table, *self.conform(df, table))
+        _, root_df, root_dest = conformed.pop(root_name)
 
         deleted_root_ids: Optional[DataFrame] = None
         keys = _hint_cols(root_table, "primary_key") or _hint_cols(root_table, "merge_key")
-        if keyed and keys and self.store.exists(root_name):
+        if (
+            disposition == "merge" and strategy in ("delete-insert", "upsert")
+            and keys and root_dest is not None
+        ):
             # roots being replaced or deleted in this load
-            deleted_root_ids = (
-                self.store.read(root_name)
-                .join(root_df.select(*keys).distinct(), on=keys, how="left_semi")
-                .select("_dlt_id")
-            )
+            deleted_root_ids = root_dest.join(
+                root_df.select(*keys).distinct(), on=keys, how="left_semi"
+            ).select("_dlt_id")
 
-        landed = self.write_table(root_df, root_table, load_id)
+        landed = self._write(root_df, root_dest, root_table, load_id)
 
-        for child_name, child_df in tables.items():
-            if child_name == root_name:
-                continue
+        for child_name, (child_table, child_df, dest) in conformed.items():
             if landed is not None and C_DLT_ROOT_ID in child_df.columns:
                 ids = landed.select(F.col("_dlt_id").alias(C_DLT_ROOT_ID))
                 child_df = child_df.join(ids, on=C_DLT_ROOT_ID, how="left_semi")
-            if keyed:
-                if self.store.exists(child_name):
-                    dest_child = self.store.read(child_name)
-                    if strategy != "insert-only" and deleted_root_ids is not None and C_DLT_ROOT_ID in dest_child.columns:
-                        dest_child = D.delete_child_rows(dest_child, deleted_root_ids)
-                    new_child = dest_child.unionByName(
-                        child_df.select(*dest_child.columns), allowMissingColumns=False
-                    ) if set(child_df.columns) == set(dest_child.columns) else union_evolved(dest_child, child_df)
-                    self.store.overwrite(new_child, child_name)
-                else:
-                    self.store.append(child_df, child_name)
-            elif disposition == "replace":
-                self.store.overwrite(child_df, child_name)
-            elif disposition == "merge" and strategy == "scd2":
-                # nested tables are insert-only by row-hash id
-                if self.store.exists(child_name):
-                    dest_child = self.store.read(child_name)
-                    fresh = child_df.join(
-                        dest_child.select("_dlt_id"), on="_dlt_id", how="left_anti"
-                    ).select(*dest_child.columns)
-                    self.store.append(fresh, child_name)
-                else:
-                    self.store.append(child_df, child_name)
+            if deleted_root_ids is not None and dest is not None and C_DLT_ROOT_ID in dest.columns:
+                kept = D.delete_child_rows(dest, deleted_root_ids)
+                self.store.overwrite(kept.unionByName(child_df, allowMissingColumns=True), child_name)
             else:
-                self.write_table(child_df, {"name": child_name, "parent": root_name}, load_id)
+                self._write(child_df, dest, child_table, load_id)
 
     # -- commit protocol (row formats and commit rule: control.py) --
 
@@ -399,6 +389,23 @@ def _hint_cols(table: TTableSchema, hint: str) -> List[str]:
 def _first_hint_col(table: TTableSchema, hint: str) -> Optional[str]:
     cols = _hint_cols(table, hint)
     return cols[0] if cols else None
+
+
+def _nested_table(
+    table: TTableSchema, root_disposition: str, root_strategy: str
+) -> TTableSchema:
+    """A registered nested table under the disposition its root's implies:
+    replace replaces, scd2 inserts the rows whose ``_dlt_id`` (a content
+    hash) is new, and every other disposition appends.  The nested rows
+    of delete-insert and upsert roots are the one case ``write_chain``
+    handles itself: those of replaced roots are dropped first."""
+    if root_disposition == "replace":
+        return dict(table, write_disposition="replace")
+    if root_disposition == "merge" and root_strategy == "scd2":
+        cols = {n: dict(c, primary_key=n == C_DLT_ID) for n, c in table["columns"].items()}
+        return dict(table, columns=cols, write_disposition="merge",
+                    x_merge_strategy="insert-only")
+    return dict(table, write_disposition="append")
 
 
 def load_id_to_ts(load_id: str) -> str:

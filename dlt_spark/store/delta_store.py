@@ -112,10 +112,10 @@ class DeltaTableStore(TableStore):
         when_matched_update_all: bool = True,
     ) -> None:
         """Row-level merge — ONE logged ``MERGE`` touching only the
-        files holding matched keys (the load stage delegates
-        upsert/insert-only here instead of rewriting the table; see
-        ``load.py``).  ``when_matched_update_all=False`` is the
-        insert-only strategy: matched rows stay untouched.  Reference
+        files holding matched keys (the load stage delegates upserts
+        here instead of rewriting the table, and appends insert-only's
+        new keys; see ``load.py``).  ``when_matched_update_all=False``
+        is the insert-only strategy: matched rows stay untouched.  Reference
         semantics: ``dlt/destinations/sql_jobs.py`` gen_upsert_sql
         :742-903 / insert-only :762-773."""
         if not self.exists(table):
