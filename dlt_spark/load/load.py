@@ -10,14 +10,11 @@ write is one distributed Spark action.  What remains ours:
   ``sql_jobs.py:48-75``), over tables normalized from one package that
   the pipeline pins once (reference ``dlt/extract/extract.py`` package
   storage) — every write reads the same rows and the same random ids;
-- **one write path**: every table of a package, root or nested, meets
-  its stored table through :meth:`LoadStage.conform` and is written by
-  one disposition dispatch; a nested table's disposition derives from
-  its root's.  All tables are conformed before the first write, so a
-  frozen contract anywhere in the package raises with the store
-  untouched.  A write that only adds rows (append, insert-only's new
-  keys, scd2's new nested rows) is a ``store.append``, which evolves the
-  stored schema by name instead of rewriting the table;
+- **one write path**: every table of a package is conformed to its
+  stored table (:meth:`LoadStage.conform`) before the first write, then
+  written by one disposition dispatch, a nested table under a
+  disposition derived from its root's; a write that only adds rows is a
+  ``store.append``, which evolves the stored schema by name;
 - **nested rows follow their roots**: the pipeline decides a package's
   root rows before their lists explode (contracts, one row per merge
   key); a root write that drops more rows (hard deletes, insert-only's
@@ -48,6 +45,7 @@ from ..schema.schema import Schema
 from ..schema.spark_types import from_spark_type
 from ..schema.typing import (
     C_DLT_ID,
+    C_DLT_PARENT_ID,
     C_DLT_ROOT_ID,
     LOADS_TABLE_NAME,
     VERSION_TABLE_NAME,
@@ -140,22 +138,13 @@ class LoadStage:
         return self._apply_data_type_contract(align_with_variants(df, dest), dest, name), dest
 
     def write_table(
-        self, df: DataFrame, table: TTableSchema, load_id: str
-    ) -> Optional[DataFrame]:
-        """Conform ``df`` to the stored ``table`` and write it under its
-        disposition (one table; :meth:`write_chain` writes a package,
-        conforming all its tables first).  Returns the
-        rows of ``df`` this write lands when a merge's hard deletes or
-        insert-only's key test drop some, else ``None`` (every row
-        lands)."""
-        if table.get("write_disposition", "append") == "skip":
-            return None
-        return self._write(*self.conform(df, table), table, load_id)
-
-    def _write(
         self, df: DataFrame, dest: Optional[DataFrame], table: TTableSchema, load_id: str
     ) -> Optional[DataFrame]:
-        """:meth:`write_table` of a ``df`` already conformed to ``dest``."""
+        """Write ``df``, already conformed to the stored ``dest``
+        (:meth:`conform`), into ``table`` under its disposition.  Returns
+        the rows of ``df`` this write lands when a merge's hard deletes or
+        insert-only's key test drop some, else ``None`` (every row
+        lands)."""
         name = table["name"]
         disposition = table.get("write_disposition", "append")
         partition_by = _hint_cols(table, "partition") or None
@@ -227,14 +216,11 @@ class LoadStage:
             landed = None
             if strategy in ("delete-insert", "upsert") and hard_delete:
                 landed = D.apply_hard_delete(df, hard_delete)
-            # lakehouse fast path: a store exposing row-level `upsert`
+            # lakehouse fast path: a store with row-level `upsert`
             # (Delta/Iceberg MERGE INTO) applies an upsert as ONE logged
-            # merge touching only matched files — at 100 TB the
-            # difference between a snapshot commit and rewriting the
-            # whole table through overwrite().  Guarded to the cases
-            # whose semantics the generic path and MERGE share exactly:
-            # no hard-delete flag (needs WHEN MATCHED ... THEN DELETE)
-            # and no in-flight schema evolution.
+            # merge touching only matched files, not a table rewrite.
+            # Guarded to what MERGE shares with the generic path: no
+            # hard-delete flag and no in-flight schema evolution.
             if (
                 strategy == "upsert"
                 and dest is not None
@@ -265,10 +251,8 @@ class LoadStage:
                 )
             else:
                 raise ValueError(f"unknown merge strategy {strategy!r}")
-            if dest is None:
-                self.store.append(result, name, partition_by=partition_by)
-            else:
-                self.store.overwrite(result, name, partition_by=partition_by)
+            write = self.store.append if dest is None else self.store.overwrite
+            write(result, name, partition_by=partition_by)
             return landed
         raise ValueError(f"unknown write disposition {disposition!r}")
 
@@ -317,27 +301,33 @@ class LoadStage:
         root rows the pipeline already decided (contracts, one row per
         merge key), so every nested row belongs to exactly one root row.
 
-        Every table is conformed to its stored table before the first
-        write, so a frozen contract on any of them raises with the store
-        untouched.  A nested table is written under a disposition derived
-        from the root's (:func:`_nested_table`).  When the root write
-        drops rows (a merge's hard deletes, insert-only's existing keys),
-        a child carrying ``_dlt_root_id`` keeps only the rows of the
-        roots that land.  For delete-insert and upsert merges, child rows
-        of replaced roots are removed by ``_dlt_root_id`` before the
-        child batch is added (reference root-key delete,
+        Every table is conformed before the first write, so a frozen
+        contract anywhere raises with the store untouched; a nested row
+        whose parent row ``discard_row`` dropped goes too.  A nested
+        table is written under its root's disposition (:func:`_nested_table`)
+        and keeps only the rows of the roots a root write lands.  For
+        delete-insert and upsert merges, child rows of replaced roots are
+        removed by ``_dlt_root_id`` first (reference root-key delete,
         ``sql_jobs.py:550-739``)."""
         root_name = root_table["name"]
         disposition = root_table.get("write_disposition", "append")
         if root_name not in tables or disposition == "skip":
             return  # whole batch discarded by a schema contract, or skipped
         strategy = root_table.get("x_merge_strategy", "delete-insert")
+        discard_row = self.schema.resolve_contract(root_name).get("data_type") == "discard_row"
         conformed = {}
-        for name, df in tables.items():
+        for name, df in tables.items():  # ancestry order
             table = root_table if name == root_name else _nested_table(
                 self.schema.tables[name], disposition, strategy
             )
-            conformed[name] = (table, *self.conform(df, table))
+            df, dest = self.conform(df, table)
+            # a nested table is named `<parent>__<field>`; the root's rows
+            # were decided before their lists exploded
+            parent = max((p for p in conformed if name.startswith(p + "__")), key=len, default=None)
+            if discard_row and parent not in (None, root_name):
+                ids = conformed[parent][1].select(F.col(C_DLT_ID).alias(C_DLT_PARENT_ID))
+                df = df.join(ids, on=C_DLT_PARENT_ID, how="left_semi")
+            conformed[name] = (table, df, dest)
         _, root_df, root_dest = conformed.pop(root_name)
 
         deleted_root_ids: Optional[DataFrame] = None
@@ -351,7 +341,7 @@ class LoadStage:
                 root_df.select(*keys).distinct(), on=keys, how="left_semi"
             ).select("_dlt_id")
 
-        landed = self._write(root_df, root_dest, root_table, load_id)
+        landed = self.write_table(root_df, root_dest, root_table, load_id)
 
         for child_name, (child_table, child_df, dest) in conformed.items():
             if landed is not None and C_DLT_ROOT_ID in child_df.columns:
@@ -361,7 +351,7 @@ class LoadStage:
                 kept = D.delete_child_rows(dest, deleted_root_ids)
                 self.store.overwrite(kept.unionByName(child_df, allowMissingColumns=True), child_name)
             else:
-                self._write(child_df, dest, child_table, load_id)
+                self.write_table(child_df, dest, child_table, load_id)
 
     # -- commit protocol (row formats and commit rule: control.py) --
 

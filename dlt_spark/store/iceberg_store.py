@@ -147,6 +147,15 @@ class IcebergTableStore(TableStore):
         # reference write_iceberg_table append (pyiceberg.py:75); Spark
         # side = one V2 snapshot commit with schema evolution on
         if self.exists(table):
+            current = self.read(table)
+            if set(df.columns) - set(current.columns):
+                # a merge-schema append of a new column also needs the
+                # table property write.spark.accept-any-schema (untested
+                # here): rewrite the table as the by-name union instead
+                self.overwrite(
+                    current.unionByName(df, allowMissingColumns=True), table, partition_by
+                )
+                return
             df.writeTo(self._ident(table)).option(
                 "merge-schema", "true"
             ).append()

@@ -20,7 +20,7 @@ provides the same *contract* on plain parquet:
   table launches no footer-inference job, a string partition column
   keeps its type, and a column added by a later ``append`` is visible
   (NULL on older rows).  Snapshots committed without a ``schema`` field
-  still read through inference.
+  still read through inference, merged over all their dirs.
 
 Every operation is expressed through ``df.write.parquet`` /
 ``spark.read.parquet`` so swapping in Delta (``format("delta")`` +
@@ -344,8 +344,11 @@ class ParquetTableStore(TableStore):
         self, paths: List[str], schema: Optional[T.StructType], partitioned: bool = False
     ) -> DataFrame:
         """Open ``paths`` with the recorded schema (no inference job), or
-        through footer inference when the snapshot recorded none."""
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        through footer inference when the snapshot recorded none — merged
+        over every dir's footers, since an append may have added a column
+        to a later dir."""
+        reader = self.spark.read.schema(schema) if schema is not None else (
+            self.spark.read.option("mergeSchema", len(paths) > 1))
         if partitioned and len(paths) > 1:
             # hive-partitioned version dirs: partition discovery needs one
             # root per read — union the snapshots

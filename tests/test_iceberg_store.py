@@ -414,6 +414,17 @@ def test_iceberg_partition_spec_only_at_creation(spark, iceberg_env):
     assert writes[1]["partitioned_by"] is None  # existing table: no respec
 
 
+def test_iceberg_append_with_a_new_column_reads_it_back(spark, iceberg_env):
+    """An append that adds a column keeps it: existing rows read it as
+    NULL."""
+    ibs, log = iceberg_env
+    store = ibs.IcebergTableStore(spark, CAT, "ds")
+    store.append(spark.createDataFrame([(1, "a")], "id long, v string"), "t")
+    store.append(spark.createDataFrame([(2, "b", "n")], "id long, v string, note string"), "t")
+    rows = {r["id"]: r["note"] for r in store.read("t").collect()}
+    assert rows == {1: None, 2: "n"}
+
+
 def test_iceberg_upsert_merge_into(spark, iceberg_env):
     """Upsert = ONE MERGE INTO with UPDATE SET * + INSERT * — the Spark
     equivalent of reference pyiceberg.py:91-120 table.upsert(join_cols,

@@ -4,6 +4,7 @@ root's `data_type` contract like the root does, a frozen contract on any
 table of the package raises before any table is written, and a write
 that only adds rows commits as an append."""
 
+import json
 import os
 
 import pytest
@@ -62,12 +63,15 @@ def test_nested_data_type_freeze_raises_before_any_write(spark, tmp_path, strate
 @pytest.mark.parametrize("strategy", ["upsert", "scd2"])
 def test_nested_data_type_discard_row_drops_only_that_row(spark, tmp_path, strategy):
     """Under `data_type: discard_row` the nested row whose value no longer
-    fits is dropped; its root and the other nested rows land."""
+    fits is dropped with its own nested rows; its root and the other
+    nested rows land."""
     pipe = _pipe(spark, tmp_path, data_type="discard_row")
-    pipe.run([{"id": 1, "v": "a", "items": [{"x": 1}]}], table_name="orders", **_HINTS[strategy])
+    pipe.run([{"id": 1, "v": "a", "items": [{"x": 1, "tags": [{"t": "a"}]}]}],
+             table_name="orders", **_HINTS[strategy])
     pipe.run(
-        [{"id": 1, "v": "b", "items": [{"x": "abc"}, {"x": 2}]},
-         {"id": 2, "v": "c", "items": [{"x": 3}]}],
+        [{"id": 1, "v": "b", "items": [{"x": "abc", "tags": [{"t": "dropped"}]},
+                                       {"x": 2, "tags": [{"t": "b"}]}]},
+         {"id": 2, "v": "c", "items": [{"x": 3, "tags": [{"t": "c"}]}]}],
         table_name="orders", **_HINTS[strategy],
     )
     ds = pipe.dataset()
@@ -76,6 +80,8 @@ def test_nested_data_type_discard_row_drops_only_that_row(spark, tmp_path, strat
     assert kids.schema["x"].dataType == T.LongType()
     expected = [2, 3] if strategy == "upsert" else [1, 2, 3]  # scd2 keeps history
     assert sorted(r["x"] for r in kids.collect()) == expected
+    tags = sorted(r["t"] for r in ds["orders__items__tags"].spark_df().collect())
+    assert tags == (["b", "c"] if strategy == "upsert" else ["a", "b", "c"])
     roots = ds["orders"].spark_df().collect()
     if strategy == "scd2":
         roots = [r for r in roots if r["_dlt_valid_to"] is None]
@@ -101,6 +107,29 @@ def test_append_with_a_new_column_appends(spark, tmp_path):
     meta = pipe.store._current_meta("t")
     assert meta["paths"][0] == first_dir and len(meta["paths"]) == 2
     assert _dir_listing(first_dir) == before
+    rows = {r["id"]: r["note"] for r in pipe.dataset()["t"].spark_df().collect()}
+    assert rows == {1: None, 2: None, 3: "n"}
+
+
+def test_new_column_reads_back_from_a_snapshot_without_a_recorded_schema(spark, tmp_path):
+    """A table written before snapshots recorded their schema reads
+    through footer inference; an append that adds a column keeps the
+    column readable (inference merges every snapshot dir's footer)."""
+    pipe = _pipe(spark, tmp_path)
+    pipe.run([{"id": 1}], table_name="t")
+    pipe.run([{"id": 2}], table_name="t")
+    table_dir = os.path.join(pipe.store.root, "t")
+    log_dir = os.path.join(table_dir, "_log")
+    for f in [os.path.join(table_dir, "_current")] + [
+        os.path.join(log_dir, n) for n in os.listdir(log_dir)
+    ]:
+        with open(f) as fh:
+            meta = json.load(fh)
+        meta.pop("schema", None)
+        with open(f, "w") as fh:
+            json.dump(meta, fh)
+    pipe.run([{"id": 3, "note": "n"}], table_name="t")
+    assert pipe.store.history("t")[-1]["op"] == "append"
     rows = {r["id"]: r["note"] for r in pipe.dataset()["t"].spark_df().collect()}
     assert rows == {1: None, 2: None, 3: "n"}
 
